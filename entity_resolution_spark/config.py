@@ -39,10 +39,6 @@ class MinHashConfig:
     bands: int = 16
     shingle_k: int = 5  # character-shingle width
     seed: int = 42
-    mersenne_prime: int = (1 << 61) - 1
-    # one-permutation kernel (Li/Owen/Zhang '12 + densification): O(shingles)
-    # instead of O(shingles x num_hashes); False = classic k-hash family
-    one_permutation: bool = True
 
     @property
     def rows_per_band(self) -> int:
@@ -53,7 +49,6 @@ class MinHashConfig:
 @dataclass(frozen=True)
 class PipelineConfig:
     similarity_threshold: int = DEFAULT_SIMILARITY_THRESHOLD
-    consolidation_threshold: float = DEFAULT_CONSOLIDATION_THRESHOLD
     w_content: float = WEIGHT_CONTENT_RATIO
     w_jaccard: float = WEIGHT_TOKEN_JACCARD
     w_path: float = WEIGHT_PATH_JW
@@ -64,7 +59,8 @@ class PipelineConfig:
     # corpus scale. Corpus-level dedup (operators/dedup.py) keeps the
     # recall-tilted default (b=16, r=8 -> ~0.71).
     minhash: MinHashConfig = field(default_factory=lambda: MinHashConfig(bands=8))
-    # candidate generation
+    # blocked self-join limits (operators/candidates.blocked_self_join:
+    # pipeline candidates and the dedup operators' band joins)
     max_block_size: int = 2000  # census cap before salted tiling kicks in
     max_salt_groups: int = 64  # ceiling on triangular-tile width per hot block
     block_key_drop_limit: int = 100_000  # stop-key removal; drops logged, never silent
@@ -83,22 +79,5 @@ class PipelineConfig:
     # under the cap (everything in the reference's domain) are bit-exact
     # fuzz.ratio. Worst-case kernel cost becomes ~1e7 word-ops (~ms).
     lev_max_chars: int = 25_000
-    # scoring phase 1: when the candidate pairs carry at most this many
-    # DISTINCT (l_base, r_base) operand pairs, Jaro-Winkler is computed
-    # once per distinct pair and broadcast-joined back — the 2-string-in /
-    # 1-double-out Arrow round trip over EVERY pair collapses to a
-    # census-sized kernel call (blocking groups candidates by shared
-    # basename tokens, so distinct operand pairs are orders of magnitude
-    # fewer than pairs). Above either cap the inline per-pair Arrow path
-    # runs instead (no broadcast-size hazard on adversarial inputs). The
-    # byte cap is the real guard: an explicit F.broadcast ignores
-    # autoBroadcastJoinThreshold, and 2M long string pairs can be GBs, so
-    # the census aggregation also measures the summed operand length and
-    # the broadcast only happens when the ESTIMATED frame size (operand
-    # bytes + per-row overhead) fits. The row cap is a secondary fuse.
-    jw_dedup_broadcast_max: int = 500_000
-    jw_dedup_broadcast_max_bytes: int = 64 * 1024 * 1024
     # clustering
     cc_max_iterations: int = 50
-    # checkpointing / resume
-    checkpoint_dir: str | None = None

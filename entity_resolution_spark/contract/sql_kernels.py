@@ -72,7 +72,6 @@ def minhash_signature_ctes(
     or an earlier CTE (the pipeline oracle feeds the exact-dup
     representatives through it)."""
     cfg = cfg or MinHashConfig()
-    assert cfg.one_permutation, "SQL replica covers the default one-permutation kernel"
     m = cfg.num_hashes
     k = cfg.shingle_k
     seed_c = (cfg.seed * _C1) % (1 << 64)

@@ -127,7 +127,9 @@ def exploded_blocks(keyed: DataFrame) -> DataFrame:
 
 
 def block_census(blocks: DataFrame) -> DataFrame:
-    """Block-size census used for salting decisions and skew metrics
+    """(block_key, block_size) — THE block-size census: the skew-safe
+    self-join's salting/budget/stop-key decisions, the dropped-key and
+    hot-block logs and the pipeline's skew metrics all read it
     (SURVEY.md §4.2 'hot-key skew salting')."""
     return blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
 

@@ -25,7 +25,8 @@ Scale shape (delta-proportional, like plans/incremental.py):
 
 Reference bands larger than ``drop_limit`` are boilerplate stop-keys and
 are removed (their members are still reachable through their other, more
-selective bands — the same convention as `_capped_block_pairs`).
+selective bands — the same convention as the self-join kernel,
+`candidates.blocked_self_join`).
 """
 
 from __future__ import annotations
@@ -47,8 +48,9 @@ def sketch_documents(
     text_col: str = "text",
 ) -> DataFrame:
     """(id, sig, bands) — one UDF computes the signature and folds its band
-    keys (same single-kernel convention as dedup.minhash_lsh_pairs); empty
-    documents (sentinel signature) are excluded. Parquet-persistable: the
+    keys (separate sig/band UDFs would each recompute the signature, 2x the
+    dominant kernel); empty documents (sentinel signature) are excluded.
+    dedup.minhash_lsh_pairs sketches through here too. Parquet-persistable: the
     streaming dedup gate stores these as its standing-corpus state so later
     batches never re-sketch the corpus."""
     cfg = cfg or MinHashConfig()
@@ -69,16 +71,18 @@ def sketch_documents(
         )
     )
     def sketch_udf(texts: pd.Series) -> pd.DataFrame:
-        from ..functions.minhash import band_keys_from_signature, hash_params, minhash_signature
+        from ..functions.minhash import band_keys_from_signature, minhash_signature
 
-        params = hash_params(cfg)
         sigs, bands = [], []
         for t in texts.to_numpy(dtype=object):
-            s = minhash_signature(t, cfg, params)
+            s = minhash_signature(t, cfg)
             sigs.append([int(v) for v in s])
             bands.append(band_keys_from_signature(s, cfg))
         return pd.DataFrame({"sig": sigs, "bands": bands})
 
+    # whitespace-normalize BEFORE shingling (same convention as the
+    # pipeline's feature stage): whitespace-only docs collapse to "" and
+    # take the sentinel-signature exclusion below
     from ..functions.text import norm_content_col
 
     return (

@@ -13,7 +13,9 @@ inventory). All are deterministic (seeded) and shuffle-conscious:
                similarity_search for the generic ANN path)
 
 Column convention: input is (doc_id, text) unless noted; outputs carry
-left_id < right_id pairs or cluster assignments.
+left_id < right_id pairs or cluster assignments. Every band/chunk/sketch
+self-join runs through the pipeline's skew-safe kernel,
+``candidates.blocked_self_join``, at ``PipelineConfig()``'s limits.
 """
 
 from __future__ import annotations
@@ -24,109 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from ..config import MinHashConfig
+from ..config import MinHashConfig, PipelineConfig
+from .candidates import blocked_self_join
 
 # out-of-field sentinel value every empty doc's minhash slots carry
 # (functions/minhash.py: real slots are residues mod P32, so < P32)
 _MH_EMPTY_SENTINEL = 4294967291
-
-
-def _capped_block_pairs(
-    exploded: DataFrame,
-    payload_cols: list[str],
-    max_block_size: int = 2000,
-    max_salt_groups: int = 64,
-    drop_limit: int = 100_000,
-    max_pairs_per_block: int = 10_000_000,
-) -> DataFrame:
-    """Skew-safe self-join of an inverted index — the same census +
-    triangular-tile + per-block-budget machinery as the pipeline's
-    candidates.py, shared by every band-keyed dedup operator here.
-
-    ``exploded(bk, id, *payload_cols)`` -> ``(left_id, right_id, l_<p>,
-    r_<p>)`` with left_id < right_id; payload columns ride the join so no
-    join-back to the corpus is needed.
-
-    - blocks of size <= max_block_size: direct per-key self-join;
-    - hot blocks: members salted into g = ceil(size/max_block_size) groups
-      (capped at max_salt_groups) and joined per triangular tile, bounding
-      the largest join partition at ~2·size/g rows;
-    - blocks whose implied pair count exceeds max_pairs_per_block are
-      deterministically hash-thinned 1-in-K (recall knob, same convention
-      as candidates.py);
-    - blocks larger than drop_limit are stop-keys: removed entirely (at
-      corpus scale these are boilerplate/empty-content bands whose members
-      are still found through their other, more selective bands — and the
-      exact-sha path catches identical docs regardless).
-    """
-    # census by hash-aggregate + join-back, not count-over-window: the
-    # window form sorts each block in one task, so a 10^8-member stop-key
-    # would straggle in the sort before the drop filter removed it
-    census = exploded.groupBy("bk").agg(F.count("*").alias("bs"))
-    sized = exploded.join(census.hint("shuffle_hash"), "bk").filter(
-        F.col("bs") <= drop_limit
-    )
-
-    small = sized.filter(
-        (F.col("bs") > 1) & (F.col("bs") <= max_block_size)
-    ).drop("bs")
-    a = small.select(
-        "bk",
-        F.col("id").alias("left_id"),
-        *[F.col(c).alias(f"l_{c}") for c in payload_cols],
-    )
-    b = small.hint("shuffle_hash").select(
-        "bk",
-        F.col("id").alias("right_id"),
-        *[F.col(c).alias(f"r_{c}") for c in payload_cols],
-    )
-    small_pairs = (
-        a.join(b, "bk").where(F.col("left_id") < F.col("right_id")).drop("bk")
-    )
-
-    hot = sized.filter(F.col("bs") > max_block_size)
-    g = F.least(
-        F.lit(max_salt_groups),
-        F.ceil(F.col("bs") / max_block_size).cast("int"),
-    )
-    est_pairs = (F.col("bs") * (F.col("bs") - 1) / 2).cast("long")
-    k = F.greatest(F.lit(1), F.ceil(est_pairs / max_pairs_per_block)).cast("long")
-    salted = hot.select(
-        "bk",
-        "id",
-        *payload_cols,
-        g.alias("g"),
-        F.pmod(F.xxhash64(F.col("id")), g).cast("int").alias("salt"),
-        k.alias("__k"),
-    )
-    tiled = (
-        salted.select(
-            "bk", "id", *payload_cols, "salt", "__k",
-            F.explode(F.sequence(F.lit(0), F.col("g") - 1)).alias("t"),
-        )
-        .select(
-            "bk", "id", *payload_cols, "salt", "__k",
-            F.least("salt", "t").alias("ti"),
-            F.greatest("salt", "t").alias("tj"),
-        )
-        .dropDuplicates(["bk", "id", "ti", "tj"])
-    )
-    ta, tb = tiled.alias("a"), tiled.hint("shuffle_hash").alias("b")
-    hot_pairs = (
-        ta.join(tb, ["bk", "ti", "tj"])
-        .where(F.col("a.id") < F.col("b.id"))
-        # same-salt pairs co-occur in every tile touching their salt: keep
-        # them only in the diagonal tile so each pair is emitted once
-        .where((F.col("a.salt") != F.col("b.salt")) | (F.col("ti") == F.col("tj")))
-        .where(F.pmod(F.xxhash64(F.col("a.id"), F.col("b.id")), F.col("a.__k")) == 0)
-        .select(
-            F.col("a.id").alias("left_id"),
-            F.col("b.id").alias("right_id"),
-            *[F.col(f"a.{c}").alias(f"l_{c}") for c in payload_cols],
-            *[F.col(f"b.{c}").alias(f"r_{c}") for c in payload_cols],
-        )
-    )
-    return small_pairs.unionByName(hot_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -183,61 +88,32 @@ def minhash_lsh_pairs(
     """(left_id, right_id, est_jaccard) for pairs sharing >= 1 LSH band,
     verified with the full signature (est_jaccard >= min_jaccard).
 
-    Scale shape: explode band keys -> skew-capped self-join per band
-    (_capped_block_pairs: census + triangular salting + per-block budget +
-    stop-key removal — the same machinery as the pipeline's candidates
-    stage) -> pair dedup -> signature check. Empty documents all carry the
-    sentinel signature and would form ONE quadratic band block; they are
-    excluded here (they only ever match other empties, which the exact-sha
-    path already groups). Signatures travel with the pair join; at 128
-    hashes that is 1 KB/row — acceptable, and it avoids a second join back
-    to the corpus.
+    Scale shape: sketch (cross_corpus.sketch_documents) -> explode band
+    keys -> skew-capped self-join per band (candidates.blocked_self_join,
+    the pipeline's own kernel: census + triangular salting + per-block
+    budget + stop-key removal) -> pair dedup -> signature check. Empty
+    documents all carry the sentinel signature and would form ONE
+    quadratic band block; they are excluded (they only ever match other
+    empties, which the exact-sha path already groups). Signatures travel
+    with the pair join; at 128 hashes that is 1 KB/row — acceptable, and it
+    avoids a second join back to the corpus.
     """
-    cfg = cfg or MinHashConfig()
+    from .cross_corpus import sketch_documents
 
-    # ONE UDF computes the signature and folds its band keys (separate
-    # sig/band UDFs each recomputed the signature — 2x the dominant kernel)
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("sig", T.ArrayType(T.LongType())),
-                T.StructField("bands", T.ArrayType(T.StringType())),
-            ]
-        )
+    # materialize ONCE: the capped self-join reads this frame through
+    # several branches (census, small/hot paths, both join sides) and each
+    # would re-run the sketch kernel — the single most expensive UDF here —
+    # without a boundary. Per-doc sketches are the cheap thing to store;
+    # pairs are the expensive thing to recompute. (A StageStore write plays
+    # this role on a cluster.)
+    sigs = sketch_documents(docs, cfg, id_col, text_col).localCheckpoint(eager=True)
+    index = sigs.select(
+        F.col("id").alias("file_id"), "sig", F.explode("bands").alias("block_key")
     )
-    def sketch_udf(texts: pd.Series) -> pd.DataFrame:
-        from ..functions.minhash import band_keys_from_signature, hash_params, minhash_signature
-
-        params = hash_params(cfg)
-        sigs, bands = [], []
-        for t in texts.to_numpy(dtype=object):
-            s = minhash_signature(t, cfg, params)
-            sigs.append([int(v) for v in s])
-            bands.append(band_keys_from_signature(s, cfg))
-        return pd.DataFrame({"sig": sigs, "bands": bands})
-
-    # whitespace-normalize BEFORE shingling (same convention as the
-    # pipeline's feature stage): whitespace-only docs collapse to "" and
-    # take the sentinel-signature exclusion below instead of forming a
-    # giant exact-dup band block
-    from ..functions.text import norm_content_col
-
-    norm = norm_content_col(F.col(text_col))
-    sigs = (
-        docs.select(F.col(id_col).alias("id"), sketch_udf(norm).alias("sk"))
-        .select("id", F.col("sk.sig").alias("sig"), F.col("sk.bands").alias("bands"))
-        .filter(F.element_at("sig", 1) != F.lit(_MH_EMPTY_SENTINEL))
-        # materialize ONCE: the capped self-join reads this frame through
-        # several branches (census window, small/hot paths, both join
-        # sides) and each would re-run the sketch kernel — the single most
-        # expensive UDF here — without a boundary. Per-doc sketches are
-        # the cheap thing to store; pairs are the expensive thing to
-        # recompute. (A StageStore write plays this role on a cluster.)
-        .localCheckpoint(eager=True)
-    )
-    exploded = sigs.select("id", "sig", F.explode("bands").alias("bk"))
-    pairs = _capped_block_pairs(exploded, ["sig"]).dropDuplicates(
-        ["left_id", "right_id"]
+    pairs = (
+        blocked_self_join(index, PipelineConfig(), ["sig"])
+        .drop("block_key")
+        .dropDuplicates(["left_id", "right_id"])
     )
     est = F.aggregate(
         F.zip_with("l_sig", "r_sig", lambda x, y: (x == y).cast("int")),
@@ -265,7 +141,8 @@ def simhash_pairs(
     """(left_id, right_id, hamming) for pairs within Hamming distance
     max_hamming, found via 16-bit chunk blocking (pigeonhole: distance
     <= bands-1 guarantees a shared chunk). The chunk self-join runs
-    through _capped_block_pairs (skew-capped, same as the pipeline).
+    through candidates.blocked_self_join (skew-capped, same as the
+    pipeline).
     Token-less documents all simhash to 0 and would form one quadratic
     chunk block — excluded (exact-sha already groups identical docs)."""
 
@@ -295,9 +172,13 @@ def simhash_pairs(
         )
         for i in range(bands)
     ]
-    exploded = hashed.select("id", "sh", F.explode(F.array(*chunks)).alias("bk"))
-    pairs = _capped_block_pairs(exploded, ["sh"]).dropDuplicates(
-        ["left_id", "right_id"]
+    index = hashed.select(
+        F.col("id").alias("file_id"), "sh", F.explode(F.array(*chunks)).alias("block_key")
+    )
+    pairs = (
+        blocked_self_join(index, PipelineConfig(), ["sh"])
+        .drop("block_key")
+        .dropDuplicates(["left_id", "right_id"])
     )
     ham = F.bit_count(F.col("l_sh").bitwiseXOR(F.col("r_sh")))
     return (
@@ -435,12 +316,16 @@ def embedding_cosine_pairs(
         # per-vector sketches materialized once (see minhash_lsh_pairs)
         .localCheckpoint(eager=True)
     )
-    exploded = base.select("id", "v", "nrm", F.explode("sketches").alias("bk"))
+    index = base.select(
+        F.col("id").alias("file_id"), "v", "nrm", F.explode("sketches").alias("block_key")
+    )
     # sketch buckets are skew-capped like every other band join here: a
     # degenerate corpus (e.g. many identical or axis-aligned vectors) can
     # put a large fraction of rows in one bucket
-    pairs = _capped_block_pairs(exploded, ["v", "nrm"]).dropDuplicates(
-        ["left_id", "right_id"]
+    pairs = (
+        blocked_self_join(index, PipelineConfig(), ["v", "nrm"])
+        .drop("block_key")
+        .dropDuplicates(["left_id", "right_id"])
     )
     dot = F.aggregate(F.zip_with("l_v", "r_v", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     cos = dot / (F.col("l_nrm") * F.col("r_nrm"))

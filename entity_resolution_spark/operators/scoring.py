@@ -51,6 +51,19 @@ from ..config import PipelineConfig
 
 _OUT_COLS = ["left_id", "right_id", "block_key", "lev_ratio", "token_jaccard", "path_jw", "score"]
 
+# Phase-1 Jaro-Winkler dedup guard: when the candidate pairs carry at most
+# this many DISTINCT (l_base, r_base) operand pairs, JW is computed once per
+# distinct pair and broadcast-joined back (see score_pairs). Above either cap
+# the inline per-pair Arrow path runs instead (no broadcast-size hazard on
+# adversarial inputs). The byte cap is the real guard: an explicit
+# F.broadcast ignores autoBroadcastJoinThreshold, and 2M long string pairs
+# can be GBs, so the census also measures the summed operand bytes and the
+# broadcast only happens when the ESTIMATED frame size (operand bytes +
+# per-row overhead) fits. The row cap is a secondary fuse.
+JW_DEDUP_BROADCAST_MAX = 500_000
+JW_DEDUP_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
 class ScoringContext:
     """Per-call scoring-stage state: the phase-1 fill wall-clock and the
     live phase-1 cache handle. Each `resolve()` builds its own context and
@@ -98,13 +111,6 @@ def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     from ..functions.similarity import batch_jaro_winkler
 
     return pd.Series(batch_jaro_winkler(a, b))
-
-
-@pandas_udf(T.IntegerType())
-def _lev_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    from ..functions.similarity import batch_fuzz_ratio
-
-    return pd.Series(batch_fuzz_ratio(a, b))
 
 
 def score_pairs(
@@ -232,17 +238,14 @@ def score_pairs(
     census = base_pairs.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.sum(F.length("l_base") + F.length("r_base")), F.lit(0)
-        ).alias("chars"),
+            F.sum(F.octet_length("l_base") + F.octet_length("r_base")), F.lit(0)
+        ).alias("bytes"),
     ).collect()[0]
     n_distinct = census["n"]
-    # UTF-8 chars ~ bytes for path-like operands, plus ~48B/row of UnsafeRow
-    # + object overhead in the broadcast relation
-    est_bytes = int(census["chars"]) + 48 * n_distinct
-    if (
-        n_distinct <= cfg.jw_dedup_broadcast_max
-        and est_bytes <= cfg.jw_dedup_broadcast_max_bytes
-    ):
+    # UTF-8 operand bytes plus ~48B/row of UnsafeRow + object overhead in
+    # the broadcast relation
+    est_bytes = int(census["bytes"]) + 48 * n_distinct
+    if n_distinct <= JW_DEDUP_BROADCAST_MAX and est_bytes <= JW_DEDUP_BROADCAST_MAX_BYTES:
         jw_map = base_pairs.withColumn("path_jw", jw)
         with_jw = slim.join(F.broadcast(jw_map), ["l_base", "r_base"])
     else:

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.blocking import exploded_blocks, with_block_keys, with_features
+from ..operators.candidates import dropped_block_keys, pair_budget_k
 from ..operators.clustering import connected_components
 from ..operators.scoring import matched_edges, score_pairs
 from .pipeline import exact_duplicate_edges, sha_group_key
@@ -68,21 +69,21 @@ class IncrementalResult:
     # persist and pass as the next fold's prior_blocks
 
 
+def _live_old(old_blocks: DataFrame, new_blocks: DataFrame) -> DataFrame:
+    """Old index entries under a key the increment touches: the key set is
+    broadcast and the (corpus-sized) old index SEMI-PROBED against it —
+    scanned, never shuffled."""
+    new_keys = new_blocks.select("block_key").distinct()
+    return old_blocks.join(F.broadcast(new_keys), "block_key", "left_semi")
+
+
 def incremental_dropped_keys(
     old_blocks: DataFrame, new_blocks: DataFrame, cfg: PipelineConfig | None = None
 ) -> DataFrame:
     """Stop-keys removed from this fold's candidate generation (touched
     keys whose total membership exceeds the drop limit) — surfaced, never
-    silent, mirroring the batch path's dropped_block_keys."""
-    cfg = cfg or PipelineConfig()
-    new_keys = new_blocks.select("block_key").distinct()
-    live_old = old_blocks.join(F.broadcast(new_keys), "block_key", "left_semi")
-    idx = live_old.unionByName(new_blocks)
-    return (
-        idx.groupBy("block_key")
-        .agg(F.count("*").alias("block_size"))
-        .filter(F.col("block_size") > cfg.block_key_drop_limit)
-    )
+    silent: the batch path's dropped_block_keys over the touched index."""
+    return dropped_block_keys(_live_old(old_blocks, new_blocks).unionByName(new_blocks), cfg)
 
 
 def incremental_candidate_pairs(
@@ -92,18 +93,18 @@ def incremental_candidate_pairs(
     right side is new. Same skew ladder semantics as the batch
     candidate_pairs: stop-keys dropped (surfaced via
     incremental_dropped_keys), per-block pair budget hash-thinned
-    deterministically, cross-key dedup keeps the min block_key.
+    deterministically (the batch path's pair_budget_k over the implied
+    old-x-new pair count), cross-key dedup keeps the min block_key.
 
-    Delta-proportional: the set of keys the increment touches is broadcast
-    and the (corpus-sized) old index is SEMI-PROBED against it — the old
-    index is scanned, never shuffled, and everything downstream (census,
-    joins, budgets) runs on the delta-bounded live subset.
+    Delta-proportional: only the touched part of the old index is read
+    (_live_old), and everything downstream (census, joins, budgets) runs on
+    the delta-bounded live subset.
     """
     cfg = cfg or PipelineConfig()
-    new_keys = new_blocks.select("block_key").distinct()
-    live_old = old_blocks.join(F.broadcast(new_keys), "block_key", "left_semi")
-    tagged = live_old.withColumn("__is_new", F.lit(False)).unionByName(
-        new_blocks.withColumn("__is_new", F.lit(True))
+    tagged = (
+        _live_old(old_blocks, new_blocks)
+        .withColumn("__is_new", F.lit(False))
+        .unionByName(new_blocks.withColumn("__is_new", F.lit(True)))
     )
     census = tagged.groupBy("block_key").agg(
         F.count("*").alias("n_total"),
@@ -114,13 +115,8 @@ def incremental_candidate_pairs(
         & (F.col("n_total") >= 2)
         & (F.col("n_total") <= cfg.block_key_drop_limit)
     )
-    est = (F.col("n_total").cast("long") * F.col("n_new").cast("long")).alias("est")
-    live = live.withColumn(
-        "__k",
-        F.greatest(
-            F.lit(1), F.ceil(est / cfg.max_pairs_per_hot_block)
-        ).cast("long"),
-    ).select("block_key", "__k")
+    est = F.col("n_total").cast("long") * F.col("n_new").cast("long")
+    live = live.withColumn("__k", pair_budget_k(est, cfg)).select("block_key", "__k")
     idx = tagged.join(live.hint("shuffle_hash"), "block_key")
     a = idx.alias("a")
     b = idx.filter(F.col("__is_new")).hint("shuffle_hash").alias("b")
@@ -198,20 +194,17 @@ def resolve_incremental(
     # projection), never shuffled or re-collapsed. Unaffected groups keep
     # their membership through the prior clusters. Edges here are the only
     # exact edges whose components can change.
-    aff = feat_all.withColumn("__sha_key", sha_group_key()).join(
-        F.broadcast(new_feat.select(sha_group_key().alias("__sha_key")).distinct()),
-        "__sha_key",
+    aff = (
+        feat_all.withColumn("__sha_key", sha_group_key())
+        .join(
+            F.broadcast(new_feat.select(sha_group_key().alias("__sha_key")).distinct()),
+            "__sha_key",
+            "left_semi",
+        )
+        .drop("__sha_key")
     )
-    rep_map = aff.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    aff = aff.join(rep_map.hint("shuffle_hash"), "__sha_key")
-    exact_edges = (
-        aff.filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
-    )
-    aff_reps = _ck(
-        "exact_collapse",
-        aff.filter(F.col("file_id") == F.col("rep_id")).drop("rep_id", "__sha_key"),
-    )
+    aff_reps, exact_edges = exact_duplicate_edges(aff)
+    aff_reps = _ck("exact_collapse", aff_reps)
     # only new rows that became their group's representative need blocking
     # keys; a new row folded under an existing old rep rides its star edge
     new_reps = aff_reps.join(new_ids, "file_id", "left_semi")

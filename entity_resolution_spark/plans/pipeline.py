@@ -22,11 +22,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.blocking import exploded_blocks, with_block_keys, with_features
+from ..operators.blocking import block_census, exploded_blocks, with_block_keys, with_features
 from ..operators.candidates import candidate_pairs, dropped_block_keys
 from ..operators.clustering import assign_clusters, connected_components
 from ..operators.scoring import ScoringContext, matched_edges, score_pairs
@@ -120,26 +120,10 @@ def resolve(
 
     stage_secs: dict[str, float] = {}
 
-    # ERS_TRACE_RESOLVE=1: stamp every step boundary to stderr — localizes
-    # wall-clock that the stage timers don't attribute (plan analysis,
-    # lazy-build glue) without changing any plan
-    import os as _os
-    import sys as _sys
-
-    _trace_on = _os.environ.get("ERS_TRACE_RESOLVE", "") not in ("", "0")
-    _t_last = [time.time()]
-
-    def _trace(label: str) -> None:
-        if _trace_on:
-            now = time.time()
-            print(f"[resolve-trace] {label}: +{now - _t_last[0]:.1f}s", file=_sys.stderr)
-            _t_last[0] = now
-
     def _timed(name: str, thunk):
         t0 = time.time()
         r = thunk()
         stage_secs[name] = round(time.time() - t0, 3)
-        _trace(f"timed:{name}")
         return r
 
     def _stage(name: str, compute, partition_by=None) -> DataFrame:
@@ -162,7 +146,6 @@ def resolve(
 
     feat = _force("features", _stage("features", lambda: with_features(files, cfg)))
     reps, exact_edges = exact_duplicate_edges(feat)
-    _trace("build:exact_edges")
     reps = _force("exact_collapse", reps)
 
     keyed = with_block_keys(reps, cfg)
@@ -177,7 +160,6 @@ def resolve(
         ~F.col("block_key").startswith("sha:")
     ).persist()
 
-    _trace("build:blocks")
     pairs = _force("candidates", _stage("pairs", lambda: candidate_pairs(blocks, cfg)))
     scoring_ctx = ScoringContext()
     scored = _force(
@@ -197,7 +179,6 @@ def resolve(
     # write) — phase-1's internal cache is no longer needed
     scoring_ctx.release_phase1()
 
-    _trace("release_phase1")
     near_edges = matched_edges(scored, cfg)
     all_edges = near_edges.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
@@ -205,7 +186,6 @@ def resolve(
 
     components = _timed("clustering", lambda: connected_components(all_edges, cfg))
     clusters = _stage("clusters", lambda: assign_clusters(feat, components))
-    _trace("build:clusters")
 
     dropped = dropped_block_keys(blocks, cfg)
     metrics = _timed(
@@ -221,7 +201,6 @@ def resolve(
         store.write("metrics", metrics)
         store.write("lineage", scored)  # every pair decision, with block_key provenance
 
-    _trace("build:timing_union")
     return ResolutionResult(
         feat, scored, clusters, metrics, dropped, blocks, scoring_ctx
     )
@@ -255,13 +234,13 @@ def _build_metrics(spark, files, pairs, scored, clusters, cfg, blocks=None) -> D
         # block-size distribution — the skew evidence (how close the
         # largest block sits to the salting threshold and how many blocks
         # crossed it). One aggregate pass over the census.
-        census = blocks.groupBy("block_key").agg(F.count("*").alias("n"))
-        b = census.agg(
+        n = F.col("block_size")
+        b = block_census(blocks).agg(
             F.count("*").alias("blocks"),
-            F.max("n").alias("max_block"),
-            F.expr("percentile_approx(n, 0.99)").alias("p99_block"),
-            F.sum((F.col("n") > cfg.max_block_size).cast("long")).alias("salted_blocks"),
-            F.sum((F.col("n") > cfg.block_key_drop_limit).cast("long")).alias("dropped_keys"),
+            F.max(n).alias("max_block"),
+            F.percentile_approx(n, 0.99).alias("p99_block"),
+            F.sum((n > cfg.max_block_size).cast("long")).alias("salted_blocks"),
+            F.sum((n > cfg.block_key_drop_limit).cast("long")).alias("dropped_keys"),
         ).collect()[0]
         rows += [
             ("blocking", "blocks", float(b["blocks"])),

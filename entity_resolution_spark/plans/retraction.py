@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.clustering import connected_components
 from .incremental import IncrementalResult, resolve_incremental
-from .pipeline import sha_group_key
+from .pipeline import exact_duplicate_edges, sha_group_key
 
 
 @dataclass
@@ -159,13 +159,8 @@ def retract_and_repair(
     # exact star edges among the surviving members' sha groups (interim
     # representative = min member; the promoted-rep fold below re-collapses
     # groups that gained their true new representative)
-    mem_feat = feat_surv.join(F.broadcast(members), "file_id", "left_semi")
-    mem_sha = mem_feat.withColumn("__sha_key", sha_group_key())
-    mem_rep = mem_sha.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    exact = (
-        mem_sha.join(mem_rep.hint("shuffle_hash"), "__sha_key")
-        .filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
+    _, exact = exact_duplicate_edges(
+        feat_surv.join(F.broadcast(members), "file_id", "left_semi")
     )
     edges = near.unionByName(exact).localCheckpoint(eager=True)
     components = connected_components(edges, cfg)

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.clustering import connected_components
-from .pipeline import sha_group_key
+from .pipeline import exact_duplicate_edges
 
 
 @dataclass
@@ -127,14 +127,8 @@ def apply_review_decisions(
         )
         .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
     )
-    mem_sha = prior_features.join(
-        F.broadcast(members), "file_id", "left_semi"
-    ).withColumn("__sha_key", sha_group_key())
-    mem_rep = mem_sha.groupBy("__sha_key").agg(F.min("file_id").alias("rep_id"))
-    exact = (
-        mem_sha.join(mem_rep.hint("shuffle_hash"), "__sha_key")
-        .filter(F.col("file_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("src"), F.col("file_id").alias("dst"))
+    _, exact = exact_duplicate_edges(
+        prior_features.join(F.broadcast(members), "file_id", "left_semi")
     )
     # overrides: remove the cannot edges (evidence edges are canonical
     # src<dst already), add the must edges

@@ -22,8 +22,14 @@ def _pairs_set(df):
 def test_tiled_pairs_equal_naive_pairs(spark):
     """Force the hot-block path with a tiny max_block_size: the triangular
     tiling must emit exactly the same pair set as the naive self-join, each
-    pair once."""
-    rows = [("hot", i) for i in range(97)] + [("cold", i) for i in range(200, 205)]
+    pair once. A small block whose ids overlap the hot block's reaches the
+    same pairs through a direct key: they are emitted once, with the min
+    block_key."""
+    rows = (
+        [("hot", i) for i in range(97)]
+        + [("cold", i) for i in range(200, 205)]
+        + [("direct", i) for i in range(40, 45)]
+    )
     blocks = spark.createDataFrame(rows, "block_key string, file_id long")
     cfg = PipelineConfig(max_block_size=10, max_salt_groups=8)
     got = candidate_pairs(blocks, cfg)
@@ -37,6 +43,10 @@ def test_tiled_pairs_equal_naive_pairs(spark):
         for b in range(a + 1, hi)
     }
     assert _pairs_set(got) == naive
+    overlap = {(a, b) for a in range(40, 45) for b in range(a + 1, 45)}
+    keys = {(r.left_id, r.right_id): r.block_key for r in got.collect()}
+    assert all(keys[p] == "direct" for p in overlap)
+    assert all(k == "hot" for p, k in keys.items() if p not in overlap and p[0] < 97)
 
 
 def test_stop_key_removal_logged(spark):

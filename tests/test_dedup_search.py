@@ -123,15 +123,19 @@ def test_empty_doc_flood_adds_no_simhash_pairs(spark, corpus):
 
 
 def test_capped_block_pairs_tiling_is_lossless(spark):
-    """The triangular tiling path (blocks > max_block_size) must emit every
-    unordered pair exactly once, with payloads attached from the right rows."""
-    from entity_resolution_spark.operators.dedup import _capped_block_pairs
+    """The triangular tiling path (blocks > max_block_size) of the shared
+    blocked self-join must emit every unordered pair exactly once, with
+    payloads attached from the right rows."""
+    from entity_resolution_spark.config import PipelineConfig
+    from entity_resolution_spark.operators.candidates import blocked_self_join
 
     n = 90
     exploded = spark.range(n).select(
-        F.lit("hot").alias("bk"), F.col("id"), (F.col("id") * 10).alias("pay")
+        F.lit("hot").alias("block_key"),
+        F.col("id").alias("file_id"),
+        (F.col("id") * 10).alias("pay"),
     )
-    pairs = _capped_block_pairs(exploded, ["pay"], max_block_size=20).collect()
+    pairs = blocked_self_join(exploded, PipelineConfig(max_block_size=20), ["pay"]).collect()
     assert len(pairs) == n * (n - 1) // 2
     seen = {(r.left_id, r.right_id) for r in pairs}
     assert len(seen) == len(pairs)  # no duplicate emissions
@@ -140,17 +144,22 @@ def test_capped_block_pairs_tiling_is_lossless(spark):
 
 
 def test_capped_block_pairs_budget_thins_and_drops(spark):
-    from entity_resolution_spark.operators.dedup import _capped_block_pairs
+    from entity_resolution_spark.config import PipelineConfig
+    from entity_resolution_spark.operators.candidates import blocked_self_join
 
     n = 80
-    exploded = spark.range(n).select(F.lit("hot").alias("bk"), F.col("id"))
+    exploded = spark.range(n).select(
+        F.lit("hot").alias("block_key"), F.col("id").alias("file_id")
+    )
     # budget of 500 << C(80,2)=3160: hash-thinning keeps roughly 1/K
-    thinned = _capped_block_pairs(
-        exploded, [], max_block_size=20, max_pairs_per_block=500
+    thinned = blocked_self_join(
+        exploded, PipelineConfig(max_block_size=20, max_pairs_per_hot_block=500)
     ).count()
     assert 0 < thinned < n * (n - 1) // 2
-    # stop-key removal: block above drop_limit vanishes entirely
-    dropped = _capped_block_pairs(exploded, [], max_block_size=20, drop_limit=50).count()
+    # stop-key removal: block above the drop limit vanishes entirely
+    dropped = blocked_self_join(
+        exploded, PipelineConfig(max_block_size=20, block_key_drop_limit=50)
+    ).count()
     assert dropped == 0
 
 

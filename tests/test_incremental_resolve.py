@@ -1,11 +1,20 @@
 """resolve_incremental == batch resolve on the union (no caps crossed)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_resolution_spark.config import PipelineConfig
 from entity_resolution_spark.datagen import generate_repo_files
 from entity_resolution_spark.plans.incremental import resolve_incremental
 from entity_resolution_spark.plans.pipeline import resolve
+
+
+@pytest.fixture(autouse=True)
+def _release_cached_frames(spark):
+    """Every test here runs several resolve()s; unpersist their stage frames
+    after each test, not only at module end (see conftest)."""
+    yield
+    spark.catalog.clearCache()
 
 
 def _cluster_sets(clusters_df):
