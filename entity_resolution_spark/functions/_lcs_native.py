@@ -17,6 +17,7 @@ Design constraints honored:
 - multi-process safe: every Python worker on an executor wants the .so;
   the compile writes to a temp file and atomically renames into a
   content-addressed path, so N racing workers produce one artifact;
+- loaded only from a private cache directory (functions/_native_build.py);
 - deterministic: the C code is a straight transcription of the Python
   kernel; no fast-math, no platform-dependent behavior (uint64 wraparound
   is defined).
@@ -25,13 +26,10 @@ Design constraints honored:
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import sys
-import tempfile
 
 import numpy as np
+
+from ._native_build import load_kernel
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -286,34 +284,10 @@ void lcs_batch(const uint32_t *a_arena, const uint32_t *b_arena,
 
 
 def _build() -> ctypes.CDLL | None:
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    cache_dir = os.environ.get("ERS_NATIVE_CACHE", tempfile.gettempdir())
-    so_path = os.path.join(cache_dir, f"ers_lcs_{digest}.so")
-    if not os.path.exists(so_path):
-        cc = os.environ.get("CC", "cc")
-        try:
-            with tempfile.TemporaryDirectory() as td:
-                src = os.path.join(td, "lcs.c")
-                with open(src, "w") as fh:
-                    fh.write(_C_SOURCE)
-                tmp_so = os.path.join(td, "lcs.so")
-                subprocess.run(
-                    [cc, "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                    check=True,
-                    capture_output=True,
-                    timeout=120,
-                )
-                # atomic publish: racing workers all rename to the same
-                # content-addressed path; last writer wins with identical bytes
-                import shutil
-
-                tmp_final = so_path + f".{os.getpid()}"
-                shutil.copy(tmp_so, tmp_final)
-                os.replace(tmp_final, so_path)
-        except Exception:
-            return None
+    lib = load_kernel("ers_lcs", _C_SOURCE, ["-O3"])
+    if lib is None:
+        return None
     try:
-        lib = ctypes.CDLL(so_path)
         lib.lcs_batch.argtypes = [
             ctypes.POINTER(ctypes.c_uint32),
             ctypes.POINTER(ctypes.c_uint32),

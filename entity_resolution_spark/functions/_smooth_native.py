@@ -24,18 +24,17 @@ things guarantee that:
 
 Same degradation contract as functions/_lcs_native.py: no toolchain ->
 ``lib = None`` and callers keep the Python loop; multi-process-safe
-content-addressed .so publish.
+content-addressed .so publish in a private cache directory
+(functions/_native_build.py).
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
 
 import numpy as np
+
+from ._native_build import load_kernel
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -77,36 +76,12 @@ void holt_run(const double *x, int64_t n, double alpha, double ca,
 
 
 def _build() -> ctypes.CDLL | None:
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    cache_dir = os.environ.get("ERS_NATIVE_CACHE", tempfile.gettempdir())
-    so_path = os.path.join(cache_dir, f"ers_smooth_{digest}.so")
-    if not os.path.exists(so_path):
-        cc = os.environ.get("CC", "cc")
-        try:
-            with tempfile.TemporaryDirectory() as td:
-                src = os.path.join(td, "smooth.c")
-                with open(src, "w") as fh:
-                    fh.write(_C_SOURCE)
-                tmp_so = os.path.join(td, "smooth.so")
-                subprocess.run(
-                    # -ffp-contract=off: an FMA would round a*x + b*e once
-                    # instead of twice and break bit-parity with the Python
-                    # loop / recursive-CTE oracles
-                    [cc, "-O2", "-ffp-contract=off", "-shared", "-fPIC",
-                     "-o", tmp_so, src],
-                    check=True,
-                    capture_output=True,
-                    timeout=120,
-                )
-                import shutil
-
-                tmp_final = so_path + f".{os.getpid()}"
-                shutil.copy(tmp_so, tmp_final)
-                os.replace(tmp_final, so_path)
-        except Exception:
-            return None
+    # -ffp-contract=off: an FMA would round a*x + b*e once instead of twice
+    # and break bit-parity with the Python loop / recursive-CTE oracles
+    lib = load_kernel("ers_smooth", _C_SOURCE, ["-O2", "-ffp-contract=off"])
+    if lib is None:
+        return None
     try:
-        lib = ctypes.CDLL(so_path)
         dp = ctypes.POINTER(ctypes.c_double)
         lib.ewma_run.argtypes = [dp, ctypes.c_int64, ctypes.c_double,
                                  ctypes.c_double, ctypes.c_int64,

@@ -67,12 +67,24 @@ def small_star(edges: DataFrame) -> DataFrame:
     return e1.unionByName(e2).where(F.col("src") != F.col("dst")).distinct()
 
 
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("c"),
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """Every node is the src of at most one edge and no node is both a src
+    and a dst. Every small_star output edge has src > dst, so such a graph
+    is large_star/small_star's fixed point, with each center its
+    component's minimum."""
+    ends = edges.select(
+        F.col("src").alias("node"), F.lit(1).alias("outs"), F.lit(False).alias("is_dst")
+    ).unionByName(
+        edges.select(
+            F.col("dst").alias("node"), F.lit(0).alias("outs"), F.lit(True).alias("is_dst")
+        )
+    )
+    per_node = ends.groupBy("node").agg(
+        F.sum("outs").alias("outs"), F.max("is_dst").alias("is_dst")
+    )
+    return per_node.where(
+        (F.col("outs") > 1) | ((F.col("outs") == 1) & F.col("is_dst"))
+    ).isEmpty()
 
 
 def connected_components(
@@ -87,13 +99,10 @@ def connected_components(
     # Runtime-settable SQLConf, so set it here where the plan shape needs it.
     edges.sparkSession.conf.set("spark.sql.constraintPropagation.enabled", "false")
     cur = _canon(edges).localCheckpoint(eager=True)
-    prev_sig = None
     for _ in range(cfg.cc_max_iterations):
         cur = small_star(large_star(cur)).localCheckpoint(eager=True)
-        sig = _checksum(cur)
-        if sig == prev_sig:
+        if _is_star_forest(cur):
             break
-        prev_sig = sig
     else:
         raise RuntimeError(
             f"connected components did not converge in {cfg.cc_max_iterations} iterations"

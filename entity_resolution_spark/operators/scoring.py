@@ -202,7 +202,10 @@ def score_pairs(
     # and prunable; an eager localCheckpoint was measured ~70% slower).
     # Both caches are filled NOW, before the union job runs: concurrent
     # readers of an unfilled cache each recompute its lineage (measured 2x
-    # wall-clock; same dependency-order rule as pipeline.py). The fill runs
+    # wall-clock; the plans' boundaries fill in dependency order for the
+    # same reason, plans/stages.py). This cache keeps its lineage, unlike
+    # a plan boundary: the caller's boundary on the scored union cuts it
+    # right after. The fill runs
     # at plan-BUILD time, outside the caller's stage timers — record it so
     # resolve() can attribute it. Caches are tracked and released via
     # release_phase1() / the next call, so repeated score_pairs calls never

@@ -31,6 +31,17 @@ The broadcast frames (digests, block keys, pair ids, touched clusters) are
 all O(delta x keys); for a delta that is a large fraction of the corpus,
 run the batch ``resolve()`` instead — it is the same price at that point.
 
+Stage boundaries: every delta frame with more than one consumer (new
+features, affected reps, new index entries, pairs, scored pairs, new edges,
+the folded clusters) closes its stage at a forced boundary shared with the
+batch plan (``stages.StageClock``): materialized once, in dependency
+order, as a lineage-free local checkpoint whose row count feeds the
+metrics. Cutting the lineage matters twice here: these frames carry
+broadcast-hinted joins, and Spark's cache matching never hits a persisted
+frame with such a plan, so without the cut each consumer re-runs the
+subtree (incl. the band UDF over the old corpus); and the folded clusters
+are read by both the metrics and the caller's state write.
+
 Equivalence: with no skew cap crossed, ``resolve_incremental(A, B)``
 produces exactly the clusters of ``resolve(A ∪ B)`` (asserted in
 tests/test_incremental_resolve.py). When the union pushes a block across a
@@ -57,6 +68,7 @@ from ..operators.candidates import dropped_block_keys, pair_budget_k
 from ..operators.clustering import connected_components
 from ..operators.scoring import matched_edges, score_pairs
 from .pipeline import exact_duplicate_edges, sha_group_key
+from .stages import StageClock, cut_lineage
 
 
 @dataclass
@@ -163,28 +175,9 @@ def resolve_incremental(
             "file_id", F.xxhash64(*[F.col(c) for c in id_cols])
         )
 
-    stage_secs: dict[str, float] = {}
-    import time
+    clock = StageClock()
 
-    def _force(name: str, df: DataFrame) -> DataFrame:
-        out = df.persist()
-        t0 = time.time()
-        out.count()
-        stage_secs[name] = round(time.time() - t0, 3)
-        return out
-
-    def _ck(name: str, df: DataFrame) -> DataFrame:
-        """Eager checkpoint for delta-bounded frames whose lineage carries a
-        broadcast-hinted join: Spark's cache matching never HITS a persisted
-        frame with such a plan, so each consumer would re-run the whole
-        subtree (incl. the band UDF over the old corpus — measured 2x the
-        fold). The checkpoint severs the lineage instead."""
-        t0 = time.time()
-        out = df.localCheckpoint(eager=True)
-        stage_secs[name] = round(time.time() - t0, 3)
-        return out
-
-    new_feat = _force("features_new", with_features(new_files, cfg))
+    new_feat, n_new = clock.boundary("features_new", with_features(new_files, cfg))
     feat_all = prior_features.unionByName(new_feat.select(prior_features.columns))
     new_ids = new_feat.select("file_id")
 
@@ -204,7 +197,7 @@ def resolve_incremental(
         .drop("__sha_key")
     )
     aff_reps, exact_edges = exact_duplicate_edges(aff)
-    aff_reps = _ck("exact_collapse", aff_reps)
+    aff_reps, _ = clock.boundary("exact_collapse", aff_reps)
     # only new rows that became their group's representative need blocking
     # keys; a new row folded under an existing old rep rides its star edge
     new_reps = aff_reps.join(new_ids, "file_id", "left_semi")
@@ -222,39 +215,35 @@ def resolve_incremental(
         # a smaller-id member) are harmless: their pairs drop at the scoring
         # join and the new rep carries its own keys
         old_blocks = prior_blocks
-    new_blocks = _ck(
+    new_blocks, _ = clock.boundary(
         "blocking_new",
         exploded_blocks(with_block_keys(new_reps, cfg)).filter(
             ~F.col("block_key").startswith("sha:")
         ),
     )
 
-    pairs = _ck(
+    pairs, n_pairs = clock.boundary(
         "candidates", incremental_candidate_pairs(old_blocks, new_blocks, cfg)
     )
     # scoring features: semi-probe the union down to actual pair members
     # (broadcast of the delta-bounded id set) — the corpus light-feature
-    # frame is never shuffled into the scoring joins
+    # frame is never shuffled into the scoring joins; the delta-bounded
+    # probe result is materialized so the scoring joins read it once
     pair_ids = (
         pairs.select(F.col("left_id").alias("file_id"))
         .unionByName(pairs.select(F.col("right_id").alias("file_id")))
         .distinct()
     )
-    # localCheckpoint, not just lazy: a persisted frame whose lineage
-    # contains this broadcast semi-join never gets cache HITS downstream
-    # (observed: every consumer of `scored` re-ran the whole scoring
-    # subtree, 4s+ per reference at test scale) — materializing the
-    # delta-bounded probe result restores normal cache behavior
-    feat_scoring = feat_all.join(
-        F.broadcast(pair_ids), "file_id", "left_semi"
-    ).localCheckpoint(eager=True)
+    feat_scoring, _ = cut_lineage(
+        feat_all.join(F.broadcast(pair_ids), "file_id", "left_semi")
+    )
     from ..operators.scoring import ScoringContext
 
     scoring_ctx = ScoringContext()
-    scored = _force(
+    scored, n_scored = clock.boundary(
         "scoring", score_pairs(pairs, feat_scoring, cfg, ctx=scoring_ctx)
     )
-    stage_secs["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
+    clock.seconds["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
     scoring_ctx.release_phase1()
 
     near = matched_edges(scored, cfg).select(
@@ -262,59 +251,63 @@ def resolve_incremental(
     )
     # The delta frames below fan out into several consumers (touched set,
     # star replay, CC input, final assembly, metrics) and their lineages
-    # carry broadcasts + aggregations: without a materialization boundary
-    # each consumer re-executes the whole subtree and the evaluation count
-    # multiplies through the DAG (measured: minutes instead of seconds on a
-    # 30-row delta). They are delta-bounded — checkpointing them is cheap.
-    t0 = time.time()
-    new_edges = near.unionByName(exact_edges).localCheckpoint(eager=True)
-    stage_secs["edges"] = round(time.time() - t0, 3)
+    # carry broadcasts + aggregations: without a boundary each consumer
+    # re-executes the whole subtree and the evaluation count multiplies
+    # through the DAG (measured: minutes instead of seconds on a 30-row
+    # delta). They are delta-bounded — checkpointing them is cheap.
+    new_edges, _ = clock.boundary("edges", near.unionByName(exact_edges))
 
     # Connected components over AFFECTED components only: prior clusters
     # touched by any new edge replay their star edges; everything else
     # keeps its prior assignment untouched. CC input is delta-bounded —
     # O(new edges + members of touched clusters), not O(corpus).
-    t0 = time.time()
-    touched = (
-        new_edges.select(F.col("src").alias("file_id"))
-        .unionByName(new_edges.select(F.col("dst").alias("file_id")))
-        .distinct()
-    )
-    aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    star_aff = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .filter(F.col("file_id") != F.col("cluster_id"))
-        .select(F.col("cluster_id").alias("src"), F.col("file_id").alias("dst"))
-    )
-    components = connected_components(new_edges.unionByName(star_aff), cfg)
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    ).select("file_id", "cluster_id")
-    new_singletons = (
-        new_ids.join(components, "file_id", "left_anti")
-        .select("file_id", F.col("file_id").alias("cluster_id"))
-    )
-    clusters = unchanged.unionByName(components).unionByName(new_singletons)
-    n_clusters = clusters.select("cluster_id").distinct().count()
-    stage_secs["clustering"] = round(time.time() - t0, 3)
+    with clock.timed("clustering"):
+        touched = (
+            new_edges.select(F.col("src").alias("file_id"))
+            .unionByName(new_edges.select(F.col("dst").alias("file_id")))
+            .distinct()
+        )
+        aff_clusters, seen = cut_lineage(
+            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
+            .select("cluster_id")
+            .distinct()
+        )
+        n_aff = seen["rows"]
+        star_aff = (
+            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
+            .filter(F.col("file_id") != F.col("cluster_id"))
+            .select(F.col("cluster_id").alias("src"), F.col("file_id").alias("dst"))
+        )
+        components = connected_components(new_edges.unionByName(star_aff), cfg)
+        unchanged = prior_clusters.join(
+            F.broadcast(aff_clusters), "cluster_id", "left_anti"
+        ).select("file_id", "cluster_id")
+        new_singletons = (
+            new_ids.join(components, "file_id", "left_anti")
+            .select("file_id", F.col("file_id").alias("cluster_id"))
+        )
+        # a boundary: the state write and the metrics both read it. Every
+        # cluster has exactly one root row (file_id = cluster_id, the
+        # component minimum), so counting roots counts clusters in the
+        # same job.
+        clusters, seen = cut_lineage(
+            unchanged.unionByName(components).unionByName(new_singletons),
+            roots=F.sum((F.col("file_id") == F.col("cluster_id")).cast("long")),
+        )
+        n_clusters = seen["roots"] or 0
 
     rows = [
-        ("input_new", "rows", float(new_ids.count())),
-        ("candidates", "pairs", float(pairs.count())),
+        ("input_new", "rows", float(n_new)),
+        ("candidates", "pairs", float(n_pairs)),
         (
             "candidates",
             "dropped_keys",
             float(incremental_dropped_keys(old_blocks, new_blocks, cfg).count()),
         ),
-        ("scoring", "scored_pairs", float(scored.count())),
-        ("clustering", "affected_prior_clusters", float(aff_clusters.count())),
+        ("scoring", "scored_pairs", float(n_scored)),
+        ("clustering", "affected_prior_clusters", float(n_aff)),
         ("clustering", "clusters", float(n_clusters)),
-    ] + [(k, "seconds", float(v)) for k, v in stage_secs.items()]
+    ] + clock.rows()
     metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
     return IncrementalResult(
         feat_all, scored, clusters, metrics, old_blocks.unionByName(new_blocks)

@@ -31,6 +31,7 @@ from ..operators.candidates import candidate_pairs, dropped_block_keys
 from ..operators.clustering import assign_clusters, connected_components
 from ..operators.scoring import ScoringContext, matched_edges, score_pairs
 from ..sources.io import StageStore
+from .stages import StageClock
 
 
 @dataclass
@@ -94,8 +95,6 @@ def resolve(
 ) -> ResolutionResult:
     """Run (or resume) the full pipeline on a (repo, path, commit, lang,
     content[, file_id]) frame."""
-    import time
-
     cfg = cfg or PipelineConfig()
     spark = spark or files.sparkSession
     from ..session import ensure_py_files
@@ -118,35 +117,26 @@ def resolve(
         id_cols = [c for c in ("repo", "path", "commit") if c in files.columns]
         files = files.withColumn("file_id", F.xxhash64(*[F.col(c) for c in id_cols]))
 
-    stage_secs: dict[str, float] = {}
-
-    def _timed(name: str, thunk):
-        t0 = time.time()
-        r = thunk()
-        stage_secs[name] = round(time.time() - t0, 3)
-        return r
+    clock = StageClock(parquet_backed=store is not None)
 
     def _stage(name: str, compute, partition_by=None) -> DataFrame:
         if store is None:
             return compute()
-        return _timed(name, lambda: store.get_or_compute(spark, name, compute, partition_by))
+        with clock.timed(name):
+            return store.get_or_compute(spark, name, compute, partition_by)
 
-    # No stage materialization -> cache AND FORCE the frames consumed by
-    # multiple downstream branches, in dependency order. Forcing matters as
-    # much as caching: the scoring joins read `reps` through four concurrent
-    # stages, and concurrent readers of an unfilled cache each recompute its
-    # full lineage (observed 2x+ wall-clock). With a StageStore the parquet
-    # writes create the same ordered boundaries.
-    def _force(name: str, df: DataFrame) -> DataFrame:
-        if store is not None:
-            return df
-        out = df.persist()
-        _timed(name, out.count)
-        return out
-
-    feat = _force("features", _stage("features", lambda: with_features(files, cfg)))
+    # Without a StageStore, each frame consumed by several downstream
+    # branches closes its stage at a forced boundary (stages.StageClock):
+    # materialized once, in dependency order, and returned as a lineage-free
+    # checkpoint, so later stages — and every action a caller runs on the
+    # result — plan against one node instead of the whole upstream pipeline.
+    # The boundaries' row counts are the metrics' size rows. With a
+    # StageStore the parquet writes are the boundaries.
+    feat, n_files = clock.boundary(
+        "features", _stage("features", lambda: with_features(files, cfg))
+    )
     reps, exact_edges = exact_duplicate_edges(feat)
-    reps = _force("exact_collapse", reps)
+    reps, _ = clock.boundary("exact_collapse", reps)
 
     keyed = with_block_keys(reps, cfg)
     # sha keys are singletons among representatives by construction — drop
@@ -160,23 +150,24 @@ def resolve(
         ~F.col("block_key").startswith("sha:")
     ).persist()
 
-    pairs = _force("candidates", _stage("pairs", lambda: candidate_pairs(blocks, cfg)))
+    pairs, n_pairs = clock.boundary(
+        "candidates", _stage("pairs", lambda: candidate_pairs(blocks, cfg))
+    )
     scoring_ctx = ScoringContext()
-    scored = _force(
+    scored, n_scored = clock.boundary(
         "scoring",
         _stage("scored", lambda: score_pairs(pairs, reps, cfg, ctx=scoring_ctx)),
     )
     # the eager phase-1 fill inside score_pairs runs at build time, before
-    # _force's timer starts — surface it as its own stage row (read from
-    # THIS call's context, so interleaved resolves don't cross-contaminate).
-    # DISJOINT accounting: 'scoring_p1_fill' covers the phase-1 census + JW
-    # + cache fill; 'scoring' covers ONLY the later phase-2 materialization
-    # count, which reads phase 1 from cache — the two never overlap, so the
-    # stage rows are additive to the job total (bench.py records
-    # stage_sum/unattributed to prove it per run).
-    stage_secs["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
-    # the scored union is materialized (persisted count or StageStore
-    # write) — phase-1's internal cache is no longer needed
+    # the boundary's timer starts — surface it as its own stage row (read
+    # from THIS call's context, so interleaved resolves don't
+    # cross-contaminate). DISJOINT accounting: 'scoring_p1_fill' covers the
+    # phase-1 census + JW + cache fill; 'scoring' covers ONLY the phase-2
+    # materialization, which reads phase 1 from cache — the two never
+    # overlap, so the stage rows are additive to the job total.
+    clock.seconds["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
+    # the scored union is materialized (checkpoint or StageStore write) —
+    # phase-1's internal cache is no longer needed
     scoring_ctx.release_phase1()
 
     near_edges = matched_edges(scored, cfg)
@@ -184,19 +175,19 @@ def resolve(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
     ).unionByName(exact_edges)
 
-    components = _timed("clustering", lambda: connected_components(all_edges, cfg))
+    with clock.timed("clustering"):
+        components = connected_components(all_edges, cfg)
     clusters = _stage("clusters", lambda: assign_clusters(feat, components))
 
     dropped = dropped_block_keys(blocks, cfg)
-    metrics = _timed(
-        "metrics",
-        lambda: _build_metrics(spark, files, pairs, scored, clusters, cfg, blocks=blocks),
+    with clock.timed("metrics"):
+        n_matched = near_edges.count()
+        metrics = _metrics_table(
+            spark, cfg, n_files, n_pairs, n_scored, n_matched, clusters, blocks
+        )
+    metrics = metrics.unionByName(
+        spark.createDataFrame(clock.rows(), "stage string, metric string, value double")
     )
-    timing = spark.createDataFrame(
-        [(k, "seconds", float(v)) for k, v in stage_secs.items()],
-        "stage string, metric string, value double",
-    )
-    metrics = metrics.unionByName(timing)
     if store is not None:
         store.write("metrics", metrics)
         store.write("lineage", scored)  # every pair decision, with block_key provenance
@@ -207,14 +198,24 @@ def resolve(
 
 
 def _build_metrics(spark, files, pairs, scored, clusters, cfg, blocks=None) -> DataFrame:
-    """Stage-level metrics table. Computed in one pass per frame; at scale
-    these are the dashboards that prove the skew handling worked."""
-    n_files = files.count()
-    n_pairs = pairs.count()
+    """Stage-level metrics table over a resolve's frames, counting each
+    one (resolve() itself passes the counts its boundaries took to
+    :func:`_metrics_table`)."""
     agg = scored.agg(
         F.count("*").alias("n"),
         F.coalesce(F.sum((F.col("score") >= cfg.similarity_threshold).cast("long")), F.lit(0)).alias("m"),
     ).collect()[0]
+    return _metrics_table(
+        spark, cfg, files.count(), pairs.count(), agg["n"], agg["m"], clusters, blocks
+    )
+
+
+def _metrics_table(
+    spark, cfg, n_files, n_pairs, n_scored, n_matched, clusters, blocks=None
+) -> DataFrame:
+    """Stage-level metrics table from the stage sizes; one pass over the
+    clusters and one over the block census. At scale these are the
+    dashboards that prove the skew handling worked."""
     n_clusters = clusters.select("cluster_id").distinct().count()
     # whether the compiled LCS/JW kernel loaded (driver probe; workers share
     # the same fs + content-addressed .so). A silent fallback to the pure-
@@ -225,8 +226,8 @@ def _build_metrics(spark, files, pairs, scored, clusters, cfg, blocks=None) -> D
     rows = [
         ("input", "rows", float(n_files)),
         ("candidates", "pairs", float(n_pairs)),
-        ("scoring", "scored_pairs", float(agg["n"])),
-        ("scoring", "matched_pairs", float(agg["m"])),
+        ("scoring", "scored_pairs", float(n_scored)),
+        ("scoring", "matched_pairs", float(n_matched)),
         ("scoring", "native_kernel", 1.0 if get_lib() is not None else 0.0),
         ("clustering", "clusters", float(n_clusters)),
     ]

@@ -55,7 +55,8 @@ def apply_review_decisions(
     {'match', 'non_match'} — the shape ``linkage.review_queue`` hands a
     reviewer, verdict column appended. Pair order is canonicalized; on
     conflicting verdicts for one pair, 'non_match' wins (the conservative
-    reading of a disagreement).
+    reading of a disagreement). A decision naming an id absent from
+    ``prior_clusters`` raises ValueError listing every such id.
     """
     cfg = cfg or PipelineConfig()
     spark = prior_features.sparkSession
@@ -74,6 +75,20 @@ def apply_review_decisions(
     bad = dec.filter(~F.col("decision").isin("match", "non_match"))
     if bad.limit(1).count():
         raise ValueError("decision must be 'match' or 'non_match'")
+    touched = (
+        dec.select(F.col("src").alias("file_id"))
+        .unionByName(dec.select(F.col("dst").alias("file_id")))
+        .distinct()
+    )
+    touched_rows = prior_clusters.join(
+        F.broadcast(touched), "file_id", "left_semi"
+    ).localCheckpoint(eager=True)
+    # a verdict on an id the prior resolution never saw would add a phantom
+    # edge (and phantom cluster rows) — reject the batch, naming every such id
+    unknown = touched.join(touched_rows, "file_id", "left_anti").collect()
+    if unknown:
+        ids = sorted(r["file_id"] for r in unknown)
+        raise ValueError(f"decision ids absent from prior_clusters: {ids}")
     # non_match wins when both verdicts exist for one pair
     verdict = dec.groupBy("src", "dst").agg(
         F.min(F.when(F.col("decision") == "non_match", 0).otherwise(1)).alias("__m")
@@ -90,16 +105,8 @@ def apply_review_decisions(
     )
     n_must, n_cannot = must.count(), cannot.count()
 
-    touched = (
-        dec.select(F.col("src").alias("file_id"))
-        .unionByName(dec.select(F.col("dst").alias("file_id")))
-        .distinct()
-    )
     aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+        touched_rows.select("cluster_id").distinct().localCheckpoint(eager=True)
     )
     unchanged = prior_clusters.join(
         F.broadcast(aff_clusters), "cluster_id", "left_anti"

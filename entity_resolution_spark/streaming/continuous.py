@@ -106,8 +106,9 @@ def run_continuous_resolution(
             )
             feats, clusters, blocks = inc.features, inc.clusters, inc.blocks
         base = os.path.join(state_dir, f"v{batch_id}")
-        # the resolve/incremental plans persist+force their heavy stages, so
-        # these writes are reads of filled caches, not recomputes
+        # the resolve/incremental plans close their heavy stages at
+        # lineage-cutting boundaries (plans/stages.py), so these writes read
+        # materialized rows, not recomputes
         feats.write.mode("overwrite").parquet(os.path.join(base, "features"))
         clusters.write.mode("overwrite").parquet(os.path.join(base, "clusters"))
         if blocks is not None:

@@ -81,6 +81,47 @@ def test_random_graph_vs_union_find_oracle(spark, n_nodes, n_edges, seed):
     assert got == expected
 
 
+def _union_find_labels(edges):
+    uf = UnionFind()
+    for a, b in edges:
+        if a != b:
+            uf.union(a, b)
+    touched = {x for e in edges if e[0] != e[1] for x in e}
+    return {x: uf.find(x) for x in touched}  # union() keeps the min as root
+
+
+def _rng_graph(seed, n_nodes, n_edges):
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        _rng_graph(3, 300, 200),
+        _rng_graph(11, 300, 600),
+        [(i, i + 1) for i in range(200)],  # long path
+        [(i + 1, i) for i in reversed(range(200))],  # the same path, reversed ids
+        [(0, i) for i in range(1, 50)],  # single star
+        [(i, 50) for i in range(51, 100)],  # single star, center on the dst side
+    ],
+    ids=["random_sparse", "random_dense", "path", "path_rev", "star", "star_dst"],
+)
+def test_star_forest_convergence_vs_union_find(spark, edges):
+    assert _cc(spark, edges) == _union_find_labels(edges)
+
+
+def test_star_forest_input_converges_in_one_round(spark):
+    """Oriented (src > dst) stars: one round reproduces the input, which is
+    already the fixed point, so a one-round budget must suffice."""
+    from entity_resolution_spark.config import PipelineConfig
+
+    edges = [(c + k, c) for c in (0, 100, 200) for k in range(1, 6)] + [(501, 500)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    out = connected_components(df, PipelineConfig(cc_max_iterations=1))
+    assert {r.file_id: r.cluster_id for r in out.collect()} == _union_find_labels(edges)
+
+
 def test_triangle_stats_hand_graph(spark):
     from pyspark.sql import Row
 

@@ -338,6 +338,32 @@ def test_review_empty_and_validation(spark):
         _apply(prior, [(1, 2, "maybe")], spark, cfg)
 
 
+def test_review_rejects_ids_absent_from_prior_clusters(spark):
+    """A verdict naming an id the prior resolution never saw is rejected,
+    with every such id named — a match on it would otherwise add a phantom
+    edge and phantom cluster rows."""
+    import pytest
+
+    rows = [
+        ("r1", "src/alpha.py", "c1", "py", "def alpha():\n    return 1\n" * 10),
+        ("r2", "src/omega.py", "c2", "py", "class Omega:\n    pass\n" * 10),
+    ]
+    schema = "repo string, path string, commit string, lang string, content string"
+    cfg = PipelineConfig()
+    prior = resolve(spark.createDataFrame(rows, schema), cfg)
+    ids = sorted(r["file_id"] for r in prior.clusters.collect())
+    phantom_a, phantom_b = max(ids) + 1, max(ids) + 2
+    with pytest.raises(ValueError) as err:
+        _apply(
+            prior,
+            [(ids[0], phantom_a, "match"), (phantom_b, ids[1], "non_match")],
+            spark,
+            cfg,
+        )
+    assert str(phantom_a) in str(err.value) and str(phantom_b) in str(err.value)
+    assert str(ids[0]) not in str(err.value) and str(ids[1]) not in str(err.value)
+
+
 def test_review_non_match_keeps_indirect_paths(spark):
     """Edge-level semantics: severing one scored edge does NOT split rows
     still connected through another evidence path."""

@@ -228,3 +228,42 @@ def test_interleaved_resolves_report_independent_scoring_state(spark):
             "stage = 'scoring_p1_fill' AND metric = 'seconds'"
         ).collect()
         assert row and row[0]["value"] == ctx.p1_fill_seconds
+
+
+def _analyzed_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().treeString().strip().splitlines())
+
+
+def test_plan_results_are_lineage_free(spark):
+    """resolve() and resolve_incremental() close their stages with
+    lineage-cutting boundaries: the frames they return plan against the
+    materialized rows, not the whole pipeline, so a caller's action on
+    them does not re-describe every upstream stage."""
+    from entity_resolution_spark.config import PipelineConfig
+    from entity_resolution_spark.datagen import generate_repo_files
+    from entity_resolution_spark.plans.incremental import resolve_incremental
+    from entity_resolution_spark.plans.pipeline import resolve
+
+    files = generate_repo_files(spark, 40).localCheckpoint()
+    old = files.filter(F.pmod(F.xxhash64("path"), F.lit(4)) != 0)
+    new = files.filter(F.pmod(F.xxhash64("path"), F.lit(4)) == 0)
+    cfg = PipelineConfig()
+    res = resolve(old, cfg)
+    inc = resolve_incremental(res.features, res.clusters, new, cfg, prior_blocks=res.blocks)
+
+    assert _analyzed_lines(res.features) == 1
+    assert _analyzed_lines(res.scored) == 1
+    assert _analyzed_lines(inc.scored) == 1
+    returned = ("features", "scored", "clusters", "metrics", "dropped_keys", "blocks")
+    frames = {f"resolve.{k}": getattr(res, k) for k in returned}
+    frames.update({f"incremental.{k}": getattr(inc, k) for k in returned if hasattr(inc, k)})
+    sizes = {name: _analyzed_lines(df) for name, df in frames.items()}
+    assert max(sizes.values()) <= 50, sizes
+    # the metrics report the boundaries' counts, which match the frames
+    m = {(r.stage, r.metric): r.value for r in res.metrics.collect()}
+    assert m[("input", "rows")] == old.count()
+    assert m[("scoring", "scored_pairs")] == res.scored.count()
+    mi = {(r.stage, r.metric): r.value for r in inc.metrics.collect()}
+    assert mi[("input_new", "rows")] == new.count()
+    assert mi[("scoring", "scored_pairs")] == inc.scored.count()
+    assert mi[("clustering", "clusters")] == inc.clusters.select("cluster_id").distinct().count()
