@@ -1,11 +1,12 @@
-"""entity_resolution_spark — PySpark-native record-linkage + training-data engine.
+"""entity_resolution_spark — PySpark-native record-linkage engine.
 
 A from-scratch distributed re-expression of the capabilities of
-``encrypted-ai/entity_resolution`` (reference at /root/reference, see
-SURVEY.md): blocking → pairwise scoring → transitive clustering over a
-source-code-repository table, plus the schema-matching / consolidation
-semantics of the reference and the training-data-pipeline operators
-(dedup, similarity search, text analysis) a 100 TB corpus needs.
+``encrypted-ai/entity_resolution`` (see SURVEY.md): blocking → pairwise
+scoring → transitive clustering over a source-code-repository table, the
+lifecycle verbs of a standing resolution (incremental fold, retraction,
+review, re-threshold), and the reference's schema-matching /
+consolidation semantics. The operator catalogue registered in
+``contract/`` sits outside the engine: the engine never imports it.
 
 Drop-in reference API (``SimilarColumnFinder`` etc.) lives in
 ``entity_resolution_spark.compat``.

@@ -244,11 +244,3 @@ def _jw_batch_direct(av: np.ndarray, bv: np.ndarray) -> np.ndarray:
     for i in range(len(out)):
         out[i] = jaro_winkler(av[i], bv[i])
     return out
-
-
-def batch_token_jaccard(a: pd.Series, b: pd.Series) -> np.ndarray:
-    out = np.zeros(len(a), dtype=np.float64)
-    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    for i in range(len(out)):
-        out[i] = token_jaccard(av[i], bv[i])
-    return out

@@ -26,7 +26,7 @@ Scale notes:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -134,6 +134,38 @@ def block_census(blocks: DataFrame) -> DataFrame:
     return blocks.groupBy("block_key").agg(F.count("*").alias("block_size"))
 
 
+def _global_positions(df: DataFrame, order) -> DataFrame:
+    """Add ``__gpos`` — the 0-based global position of each row along the
+    ``order`` columns — WITHOUT a single-reducer sort: range-repartition on
+    the sort key, rank within each range partition, then add per-partition
+    offsets from a partition census (a numPartitions-row control-plane
+    collect, the pipeline's block-census convention). The offsets ride a
+    broadcast-joined frame, NOT a chained F.when per partition — at
+    cluster scale the range exchange has thousands of partitions and a
+    thousands-deep when-tree breaks codegen. One range exchange, one
+    narrow census, no global single-reducer sort anywhere."""
+    part = df.repartitionByRange(*order).withColumn("__p", F.spark_partition_id())
+    w = Window.partitionBy("__p").orderBy(*order)
+    ranked = part.withColumn("__rn", F.row_number().over(w)).localCheckpoint(eager=True)
+    counts = {
+        r["__p"]: r["n"]
+        for r in ranked.groupBy("__p").agg(F.count("*").alias("n")).collect()
+    }
+    offsets, acc = [], 0
+    for p in sorted(counts):
+        offsets.append((p, acc))
+        acc += counts[p]
+    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "__p int, __off long")
+    return (
+        ranked.join(F.broadcast(off_df), "__p", "left")
+        .withColumn(
+            "__gpos",
+            (F.coalesce(F.col("__off"), F.lit(0)) + F.col("__rn") - 1).cast("long"),
+        )
+        .drop("__p", "__rn", "__off")
+    )
+
+
 def sorted_neighborhood_pairs(
     df: DataFrame,
     sort_cols: list,
@@ -150,7 +182,7 @@ def sorted_neighborhood_pairs(
     the distributed shape here keeps the SAME pair semantics with no global
     single-reducer sort and no window-function scan of the whole corpus:
 
-    * global positions via ``sampling._global_positions`` (range exchange +
+    * global positions via ``_global_positions`` (range exchange +
       per-partition rank + broadcast partition offsets);
     * tile the position space at ``window`` width. Any qualifying pair sits
       in the same or adjacent tiles, so the self-join equi-joins on the tile
@@ -163,8 +195,6 @@ def sorted_neighborhood_pairs(
     (Spark compares UTF-16 code units, most SQL engines UTF-8 bytes; they
     agree on ASCII). The contract row uses ASCII-only sort keys.
     """
-    from .sampling import _global_positions
-
     # sort_cols are column NAMES (precompute expression keys with
     # withColumn first) so the ranking projection stays resolvable.
     order = [F.col(c) for c in [*sort_cols, id_col]]

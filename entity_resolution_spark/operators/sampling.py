@@ -33,6 +33,8 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .blocking import _global_positions
+
 _HASH_COL = "__split_h"
 
 
@@ -563,38 +565,6 @@ def stratified_sample(
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= quota)
         .drop(_HASH_COL, "__n", "__rn")
-    )
-
-
-def _global_positions(df: DataFrame, order) -> DataFrame:
-    """Add ``__gpos`` — the 0-based global position of each row along the
-    ``order`` columns — WITHOUT a single-reducer sort: range-repartition on
-    the sort key, rank within each range partition, then add per-partition
-    offsets from a partition census (a numPartitions-row control-plane
-    collect, the pipeline's block-census convention). The offsets ride a
-    broadcast-joined frame, NOT a chained F.when per partition — at
-    cluster scale the range exchange has thousands of partitions and a
-    thousands-deep when-tree breaks codegen. One range exchange, one
-    narrow census, no global single-reducer sort anywhere."""
-    part = df.repartitionByRange(*order).withColumn("__p", F.spark_partition_id())
-    w = Window.partitionBy("__p").orderBy(*order)
-    ranked = part.withColumn("__rn", F.row_number().over(w)).localCheckpoint(eager=True)
-    counts = {
-        r["__p"]: r["n"]
-        for r in ranked.groupBy("__p").agg(F.count("*").alias("n")).collect()
-    }
-    offsets, acc = [], 0
-    for p in sorted(counts):
-        offsets.append((p, acc))
-        acc += counts[p]
-    off_df = df.sparkSession.createDataFrame(offsets or [(0, 0)], "__p int, __off long")
-    return (
-        ranked.join(F.broadcast(off_df), "__p", "left")
-        .withColumn(
-            "__gpos",
-            (F.coalesce(F.col("__off"), F.lit(0)) + F.col("__rn") - 1).cast("long"),
-        )
-        .drop("__p", "__rn", "__off")
     )
 
 

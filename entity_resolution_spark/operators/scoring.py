@@ -84,28 +84,6 @@ class ScoringContext:
             self._phase1.pop().unpersist()
 
 
-_CTX_MIGRATION = (
-    "module-level scoring state is gone: pass a ScoringContext to "
-    "score_pairs(ctx=...) (or read the context score_pairs attaches to "
-    "its result as `.scoring_ctx`), and use ctx.p1_fill_seconds / "
-    "ctx.release_phase1(). resolve() exposes its context as "
-    "ResolutionResult.scoring_ctx."
-)
-
-
-def last_p1_fill_seconds() -> float:
-    """Removed back-compat shim. The module-global default context made
-    this silently report 0.0 after any resolve() (which threads its own
-    context) and made release_phase1() release the wrong cache — fail
-    loudly instead of answering wrong."""
-    raise RuntimeError(_CTX_MIGRATION)
-
-
-def release_phase1() -> None:
-    """Removed back-compat shim — see :func:`last_p1_fill_seconds`."""
-    raise RuntimeError(_CTX_MIGRATION)
-
-
 @pandas_udf(T.DoubleType())
 def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     from ..functions.similarity import batch_jaro_winkler

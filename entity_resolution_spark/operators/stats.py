@@ -136,12 +136,12 @@ def zipf_fit(docs: DataFrame, text_col: str = "text") -> DataFrame:
     micro-units BEFORE summing (the DSIR convention) — integer sums are
     partition- and engine-order-independent, and the final slope/r²
     arithmetic runs on identical doubles everywhere. Ranks come from
-    `sampling._global_positions` (range-exchange rank over the
+    `blocking._global_positions` (range-exchange rank over the
     Zipf-bounded census — no single-reducer sort); ties rank by term
     ascending. Slope/r² are NULL when fewer than 2 distinct types exist.
     """
     from ..operators.tokenize import word_frequencies
-    from .sampling import _global_positions
+    from .blocking import _global_positions
 
     wc = word_frequencies(docs, text_col)
     ranked = _global_positions(

@@ -59,7 +59,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -112,7 +112,19 @@ def incremental_candidate_pairs(
     (_live_old), and everything downstream (census, joins, budgets) runs on
     the delta-bounded live subset.
     """
-    cfg = cfg or PipelineConfig()
+    return _candidates(old_blocks, new_blocks, cfg or PipelineConfig(), None)
+
+
+def _candidates(
+    old_blocks: DataFrame,
+    new_blocks: DataFrame,
+    cfg: PipelineConfig,
+    census_obs: Observation | None,
+) -> DataFrame:
+    """incremental_candidate_pairs; with ``census_obs``, the job that
+    evaluates the pairs also observes ``dropped_keys``: the number of
+    touched keys over the drop limit, i.e. the row count of
+    incremental_dropped_keys (every census key is touched)."""
     tagged = (
         _live_old(old_blocks, new_blocks)
         .withColumn("__is_new", F.lit(False))
@@ -122,6 +134,13 @@ def incremental_candidate_pairs(
         F.count("*").alias("n_total"),
         F.sum(F.col("__is_new").cast("long")).alias("n_new"),
     )
+    if census_obs is not None:
+        census = census.observe(
+            census_obs,
+            F.sum((F.col("n_total") > cfg.block_key_drop_limit).cast("long")).alias(
+                "dropped_keys"
+            ),
+        )
     live = census.filter(
         (F.col("n_new") >= 1)
         & (F.col("n_total") >= 2)
@@ -215,16 +234,21 @@ def resolve_incremental(
         # a smaller-id member) are harmless: their pairs drop at the scoring
         # join and the new rep carries its own keys
         old_blocks = prior_blocks
-    new_blocks, _ = clock.boundary(
+    new_blocks, n_new_entries = clock.boundary(
         "blocking_new",
         exploded_blocks(with_block_keys(new_reps, cfg)).filter(
             ~F.col("block_key").startswith("sha:")
         ),
     )
 
+    # the candidates job also counts the stop-keys it drops (a second probe
+    # of the corpus-sized old index would cost as much as the pairs); with
+    # no new index entries no key is touched, and Spark prunes the census
+    census_obs = Observation() if n_new_entries else None
     pairs, n_pairs = clock.boundary(
-        "candidates", incremental_candidate_pairs(old_blocks, new_blocks, cfg)
+        "candidates", _candidates(old_blocks, new_blocks, cfg, census_obs)
     )
+    n_dropped = (census_obs.get["dropped_keys"] or 0) if census_obs else 0
     # scoring features: semi-probe the union down to actual pair members
     # (broadcast of the delta-bounded id set) — the corpus light-feature
     # frame is never shuffled into the scoring joins; the delta-bounded
@@ -299,11 +323,7 @@ def resolve_incremental(
     rows = [
         ("input_new", "rows", float(n_new)),
         ("candidates", "pairs", float(n_pairs)),
-        (
-            "candidates",
-            "dropped_keys",
-            float(incremental_dropped_keys(old_blocks, new_blocks, cfg).count()),
-        ),
+        ("candidates", "dropped_keys", float(n_dropped)),
         ("scoring", "scored_pairs", float(n_scored)),
         ("clustering", "affected_prior_clusters", float(n_aff)),
         ("clustering", "clusters", float(n_clusters)),

@@ -37,6 +37,7 @@ from ..config import PipelineConfig
 from ..operators.clustering import assign_clusters, connected_components
 from ..operators.scoring import matched_edges, score_pairs
 from .pipeline import exact_duplicate_edges
+from .stages import StageClock, cut_lineage
 
 
 @dataclass
@@ -57,71 +58,67 @@ def rethreshold_clusters(
     lineage was produced under)."""
     cfg = cfg or PipelineConfig()
     spark = prior_features.sparkSession
-    import time
-
-    t0 = time.time()
+    clock = StageClock()
     new_cfg = replace(cfg, similarity_threshold=float(new_threshold))
     scored = prior_scored
     n_rescored = 0
 
-    if new_threshold < cfg.similarity_threshold:
-        lens = prior_features.select(
-            "file_id", F.length("norm_content").alias("__n")
-        )
-        lo = lens.select(
-            F.col("file_id").alias("left_id"), F.col("__n").alias("l_n")
-        )
-        ro = lens.select(
-            F.col("file_id").alias("right_id"), F.col("__n").alias("r_n")
-        )
-        j = scored.join(lo.hint("shuffle_hash"), "left_id").join(
-            ro.hint("shuffle_hash"), "right_id"
-        )
-        # identical expression trees to scoring's phase 1, fed the stored
-        # jaccard/jw doubles -> identical bound floats
-        ub = F.when(
-            (F.col("l_n") > 0) & (F.col("r_n") > 0),
-            200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
-        ).otherwise(F.lit(0.0))
-        base = (
-            cfg.w_jaccard * 100.0 * F.col("token_jaccard")
-            + cfg.w_path * 100.0 * F.col("path_jw")
-        )
-        bound = cfg.w_content * ub + base
-        old_rb = cfg.similarity_threshold - cfg.w_content * 0.5
-        new_rb = float(new_threshold) - cfg.w_content * 0.5
-        suspects = (
-            j.filter((bound < old_rb + 1e-6) & (bound >= new_rb))
-            .select("left_id", "right_id", "block_key")
-            .localCheckpoint(eager=True)
-        )
-        n_rescored = suspects.count()
-        if n_rescored:
-            resc = score_pairs(suspects, prior_features, new_cfg)
-            scored = (
-                scored.join(
-                    suspects.select("left_id", "right_id"),
-                    ["left_id", "right_id"],
-                    "left_anti",
-                )
-                .unionByName(resc.select(scored.columns))
-                .persist()
+    with clock.timed("rethreshold"):
+        if new_threshold < cfg.similarity_threshold:
+            lens = prior_features.select(
+                "file_id", F.length("norm_content").alias("__n")
             )
-            scored.count()
-            resc.scoring_ctx.release_phase1()
+            lo = lens.select(
+                F.col("file_id").alias("left_id"), F.col("__n").alias("l_n")
+            )
+            ro = lens.select(
+                F.col("file_id").alias("right_id"), F.col("__n").alias("r_n")
+            )
+            j = scored.join(lo.hint("shuffle_hash"), "left_id").join(
+                ro.hint("shuffle_hash"), "right_id"
+            )
+            # identical expression trees to scoring's phase 1, fed the
+            # stored jaccard/jw doubles -> identical bound floats
+            ub = F.when(
+                (F.col("l_n") > 0) & (F.col("r_n") > 0),
+                200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
+            ).otherwise(F.lit(0.0))
+            base = (
+                cfg.w_jaccard * 100.0 * F.col("token_jaccard")
+                + cfg.w_path * 100.0 * F.col("path_jw")
+            )
+            bound = cfg.w_content * ub + base
+            old_rb = cfg.similarity_threshold - cfg.w_content * 0.5
+            new_rb = float(new_threshold) - cfg.w_content * 0.5
+            suspects, seen = cut_lineage(
+                j.filter((bound < old_rb + 1e-6) & (bound >= new_rb)).select(
+                    "left_id", "right_id", "block_key"
+                )
+            )
+            n_rescored = seen["rows"]
+            if n_rescored:
+                resc = score_pairs(suspects, prior_features, new_cfg)
+                # the boundary fills before the phase-1 cache is released
+                scored, _ = cut_lineage(
+                    scored.join(
+                        suspects.select("left_id", "right_id"),
+                        ["left_id", "right_id"],
+                        "left_anti",
+                    ).unionByName(resc.select(scored.columns))
+                )
+                resc.scoring_ctx.release_phase1()
 
-    near = matched_edges(scored, new_cfg).select(
-        F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    )
-    _, exact_edges = exact_duplicate_edges(prior_features)
-    components = connected_components(near.unionByName(exact_edges), new_cfg)
-    clusters = assign_clusters(prior_features, components)
+        near = matched_edges(scored, new_cfg).select(
+            F.col("left_id").alias("src"), F.col("right_id").alias("dst")
+        )
+        _, exact_edges = exact_duplicate_edges(prior_features)
+        components = connected_components(near.unionByName(exact_edges), new_cfg)
+        clusters = assign_clusters(prior_features, components)
 
     rows = [
         ("rethreshold", "old_threshold", float(cfg.similarity_threshold)),
         ("rethreshold", "new_threshold", float(new_threshold)),
         ("rethreshold", "rescored_pairs", float(n_rescored)),
-        ("rethreshold", "seconds", round(time.time() - t0, 3)),
-    ]
+    ] + clock.rows()
     metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
     return RethresholdResult(scored, clusters, metrics)

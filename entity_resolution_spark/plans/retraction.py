@@ -49,6 +49,7 @@ from ..config import PipelineConfig
 from ..operators.clustering import connected_components
 from .incremental import IncrementalResult, resolve_incremental
 from .pipeline import exact_duplicate_edges, sha_group_key
+from .stages import StageClock, cut_lineage
 
 
 @dataclass
@@ -58,6 +59,56 @@ class RetractionResult:
     metrics: DataFrame  # (stage, metric, value)
     blocks: DataFrame | None = None  # surviving blocking index (if one was
     # passed in), with the fold's additions — the next prior_blocks
+
+
+def replay_reclose(
+    members: DataFrame,
+    unchanged: DataFrame,
+    prior_features: DataFrame,
+    prior_scored: DataFrame,
+    cfg: PipelineConfig,
+    must: DataFrame | None = None,
+    cannot: DataFrame | None = None,
+) -> DataFrame:
+    """Re-close the clusters of ``members`` ((file_id) rows whose
+    assignment is recomputed) from their surviving evidence and union them
+    with ``unchanged`` ((file_id, cluster_id) rows kept verbatim).
+
+    The evidence is replayed, never re-scored (pair scores are
+    pair-local): prior matched pairs with both endpoints in the member set,
+    plus exact star edges among the members' sha groups (representative =
+    min member). ``cannot`` / ``must`` ((src, dst), src < dst) remove and
+    add evidence edges before connected components runs. Shared by
+    retraction and review, whose repairs differ only in which rows they
+    recompute and in those overrides."""
+    near = (
+        prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
+        .join(
+            F.broadcast(members.withColumnRenamed("file_id", "left_id")),
+            "left_id",
+            "left_semi",
+        )
+        .join(
+            F.broadcast(members.withColumnRenamed("file_id", "right_id")),
+            "right_id",
+            "left_semi",
+        )
+        .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
+    )
+    _, exact = exact_duplicate_edges(
+        prior_features.join(F.broadcast(members), "file_id", "left_semi")
+    )
+    edges = near.unionByName(exact)
+    if cannot is not None:
+        edges = edges.join(F.broadcast(cannot), ["src", "dst"], "left_anti")
+    if must is not None:
+        edges = edges.unionByName(must)
+    edges, _ = cut_lineage(edges)
+    components = connected_components(edges, cfg)
+    singles = members.join(components, "file_id", "left_anti").select(
+        "file_id", F.col("file_id").alias("cluster_id")
+    )
+    return unchanged.unionByName(components).unionByName(singles)
 
 
 def retract_and_repair(
@@ -79,96 +130,65 @@ def retract_and_repair(
     """
     cfg = cfg or PipelineConfig()
     spark = prior_features.sparkSession
-    import time
+    clock = StageClock()
 
-    stage_secs: dict[str, float] = {}
-    t0 = time.time()
+    with clock.timed("promotion_census"):
+        del_ids, seen = cut_lineage(deleted_ids.select("file_id").distinct())
+        n_deleted = seen["rows"]
+        feat_surv = prior_features.join(F.broadcast(del_ids), "file_id", "left_anti")
 
-    del_ids = deleted_ids.select("file_id").distinct().localCheckpoint(eager=True)
-    n_deleted = del_ids.count()
-    feat_surv = prior_features.join(F.broadcast(del_ids), "file_id", "left_anti")
-
-    # --- promoted representatives -------------------------------------
-    # sha groups that CONTAIN a deleted row are the only groups whose
-    # representative can change; probe the corpus with the deleted rows'
-    # digest keys (deletion-batch-bounded broadcast, corpus scanned only).
-    del_keys = (
-        prior_features.join(F.broadcast(del_ids), "file_id", "left_semi")
-        .select(sha_group_key().alias("__sha_key"))
-        .distinct()
-    )
-    aff_sha = prior_features.withColumn("__sha_key", sha_group_key()).join(
-        F.broadcast(del_keys), "__sha_key"
-    )
-    old_rep = aff_sha.groupBy("__sha_key").agg(F.min("file_id").alias("old_rep"))
-    surv_rep = (
-        aff_sha.join(F.broadcast(del_ids), "file_id", "left_anti")
-        .groupBy("__sha_key")
-        .agg(F.min("file_id").alias("new_rep"))
-    )
-    promoted = (
-        old_rep.join(
-            F.broadcast(del_ids.withColumnRenamed("file_id", "old_rep")),
-            "old_rep",
-            "left_semi",
+        # sha groups that CONTAIN a deleted row are the only groups whose
+        # representative can change; probe the corpus with the deleted
+        # rows' digest keys (deletion-batch-bounded broadcast, corpus
+        # scanned only).
+        del_keys = (
+            prior_features.join(F.broadcast(del_ids), "file_id", "left_semi")
+            .select(sha_group_key().alias("__sha_key"))
+            .distinct()
         )
-        .join(surv_rep, "__sha_key")
-        .select(F.col("new_rep").alias("file_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_promoted = promoted.count()
-    stage_secs["promotion_census"] = round(time.time() - t0, 3)
+        aff_sha = prior_features.withColumn("__sha_key", sha_group_key()).join(
+            F.broadcast(del_keys), "__sha_key"
+        )
+        old_rep = aff_sha.groupBy("__sha_key").agg(F.min("file_id").alias("old_rep"))
+        surv_rep = (
+            aff_sha.join(F.broadcast(del_ids), "file_id", "left_anti")
+            .groupBy("__sha_key")
+            .agg(F.min("file_id").alias("new_rep"))
+        )
+        promoted, seen = cut_lineage(
+            old_rep.join(
+                F.broadcast(del_ids.withColumnRenamed("file_id", "old_rep")),
+                "old_rep",
+                "left_semi",
+            )
+            .join(surv_rep, "__sha_key")
+            .select(F.col("new_rep").alias("file_id"))
+            .distinct()
+        )
+        n_promoted = seen["rows"]
 
     # --- phase A: retract + re-close affected clusters ----------------
-    t0 = time.time()
-    touched = del_ids.unionByName(promoted)
-    aff_clusters = (
-        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    )
-    # surviving, non-promoted members of the affected clusters — the rows
-    # whose assignment must be recomputed from surviving evidence
-    members = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .join(F.broadcast(touched), "file_id", "left_anti")
-        .select("file_id")
-        .localCheckpoint(eager=True)
-    )
-    # replayed near evidence: prior matched pairs with both endpoints in
-    # the member set (never re-scored — pair scores are pair-local)
-    near = (
-        prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "left_id")),
-            "left_id",
-            "left_semi",
+    with clock.timed("retract_reclose"):
+        touched = del_ids.unionByName(promoted)
+        aff_clusters, seen = cut_lineage(
+            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
+            .select("cluster_id")
+            .distinct()
         )
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "right_id")),
-            "right_id",
-            "left_semi",
+        n_aff = seen["rows"]
+        unchanged = prior_clusters.join(
+            F.broadcast(aff_clusters), "cluster_id", "left_anti"
         )
-        .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    )
-    # exact star edges among the surviving members' sha groups (interim
-    # representative = min member; the promoted-rep fold below re-collapses
-    # groups that gained their true new representative)
-    _, exact = exact_duplicate_edges(
-        feat_surv.join(F.broadcast(members), "file_id", "left_semi")
-    )
-    edges = near.unionByName(exact).localCheckpoint(eager=True)
-    components = connected_components(edges, cfg)
-    singles = members.join(components, "file_id", "left_anti").select(
-        "file_id", F.col("file_id").alias("cluster_id")
-    )
-    phase_a = unchanged.unionByName(components).unionByName(singles)
-    stage_secs["retract_reclose"] = round(time.time() - t0, 3)
+        # surviving, non-promoted members of the affected clusters — the
+        # rows whose assignment must be recomputed from surviving evidence
+        # (interim sha representative = min member; the promoted-rep fold
+        # below re-collapses groups that gained their true new one)
+        members, _ = cut_lineage(
+            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
+            .join(F.broadcast(touched), "file_id", "left_anti")
+            .select("file_id")
+        )
+        phase_a = replay_reclose(members, unchanged, prior_features, prior_scored, cfg)
 
     blocks_surv = (
         prior_blocks.join(F.broadcast(touched), "file_id", "left_anti")
@@ -177,15 +197,9 @@ def retract_and_repair(
     )
 
     if n_promoted == 0:
-        rows = [
-            ("retraction", "deleted_rows", float(n_deleted)),
-            ("retraction", "promoted_reps", 0.0),
-            ("retraction", "affected_prior_clusters", float(aff_clusters.count())),
-        ] + [(k, "seconds", float(v)) for k, v in stage_secs.items()]
-        metrics = spark.createDataFrame(
-            rows, "stage string, metric string, value double"
+        return RetractionResult(
+            feat_surv, phase_a, _metrics(spark, n_deleted, 0, n_aff, clock), blocks_surv
         )
-        return RetractionResult(feat_surv, phase_a, metrics, blocks_surv)
 
     # --- phase B: fold promoted representatives back in ---------------
     # They are "new" to the scoring stage (non-representatives never
@@ -195,36 +209,39 @@ def retract_and_repair(
     # each group's minimum survivor, so they become the representative),
     # blocks + scores them against the full index, and re-closes only the
     # components they touch.
-    t0 = time.time()
-    raw_cols = [
-        c
-        for c in ("repo", "path", "commit", "lang", "content", "file_id")
-        if c in prior_features.columns
-    ]
-    promoted_files = prior_features.join(
-        F.broadcast(promoted), "file_id", "left_semi"
-    ).select(*raw_cols)
-    prior_wo_promoted = feat_surv.join(
-        F.broadcast(promoted), "file_id", "left_anti"
-    )
-    clusters_wo_promoted = phase_a.join(
-        F.broadcast(promoted), "file_id", "left_anti"
-    )
-    fold: IncrementalResult = resolve_incremental(
-        prior_wo_promoted,
-        clusters_wo_promoted,
-        promoted_files,
-        cfg,
-        prior_blocks=blocks_surv,
-    )
-    stage_secs["promotion_fold"] = round(time.time() - t0, 3)
+    with clock.timed("promotion_fold"):
+        raw_cols = [
+            c
+            for c in ("repo", "path", "commit", "lang", "content", "file_id")
+            if c in prior_features.columns
+        ]
+        promoted_files = prior_features.join(
+            F.broadcast(promoted), "file_id", "left_semi"
+        ).select(*raw_cols)
+        prior_wo_promoted = feat_surv.join(
+            F.broadcast(promoted), "file_id", "left_anti"
+        )
+        clusters_wo_promoted = phase_a.join(
+            F.broadcast(promoted), "file_id", "left_anti"
+        )
+        fold: IncrementalResult = resolve_incremental(
+            prior_wo_promoted,
+            clusters_wo_promoted,
+            promoted_files,
+            cfg,
+            prior_blocks=blocks_surv,
+        )
 
+    metrics = _metrics(spark, n_deleted, n_promoted, n_aff, clock).unionByName(
+        fold.metrics
+    )
+    return RetractionResult(fold.features, fold.clusters, metrics, fold.blocks)
+
+
+def _metrics(spark, n_deleted: int, n_promoted: int, n_aff: int, clock: StageClock):
     rows = [
         ("retraction", "deleted_rows", float(n_deleted)),
         ("retraction", "promoted_reps", float(n_promoted)),
-        ("retraction", "affected_prior_clusters", float(aff_clusters.count())),
-    ] + [(k, "seconds", float(v)) for k, v in stage_secs.items()]
-    metrics = spark.createDataFrame(
-        rows, "stage string, metric string, value double"
-    ).unionByName(fold.metrics)
-    return RetractionResult(fold.features, fold.clusters, metrics, fold.blocks)
+        ("retraction", "affected_prior_clusters", float(n_aff)),
+    ] + clock.rows()
+    return spark.createDataFrame(rows, "stage string, metric string, value double")

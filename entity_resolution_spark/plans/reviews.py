@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.clustering import connected_components
-from .pipeline import exact_duplicate_edges
+from .retraction import replay_reclose
+from .stages import StageClock, cut_lineage
 
 
 @dataclass
@@ -60,102 +60,66 @@ def apply_review_decisions(
     """
     cfg = cfg or PipelineConfig()
     spark = prior_features.sparkSession
-    import time
+    clock = StageClock()
 
-    t0 = time.time()
-    dec = (
-        decisions.select(
-            F.least("left_id", "right_id").alias("src"),
-            F.greatest("left_id", "right_id").alias("dst"),
-            F.col("decision"),
+    with clock.timed("review"):
+        dec = (
+            decisions.select(
+                F.least("left_id", "right_id").alias("src"),
+                F.greatest("left_id", "right_id").alias("dst"),
+                F.col("decision"),
+            )
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
         )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    bad = dec.filter(~F.col("decision").isin("match", "non_match"))
-    if bad.limit(1).count():
-        raise ValueError("decision must be 'match' or 'non_match'")
-    touched = (
-        dec.select(F.col("src").alias("file_id"))
-        .unionByName(dec.select(F.col("dst").alias("file_id")))
-        .distinct()
-    )
-    touched_rows = prior_clusters.join(
-        F.broadcast(touched), "file_id", "left_semi"
-    ).localCheckpoint(eager=True)
-    # a verdict on an id the prior resolution never saw would add a phantom
-    # edge (and phantom cluster rows) — reject the batch, naming every such id
-    unknown = touched.join(touched_rows, "file_id", "left_anti").collect()
-    if unknown:
-        ids = sorted(r["file_id"] for r in unknown)
-        raise ValueError(f"decision ids absent from prior_clusters: {ids}")
-    # non_match wins when both verdicts exist for one pair
-    verdict = dec.groupBy("src", "dst").agg(
-        F.min(F.when(F.col("decision") == "non_match", 0).otherwise(1)).alias("__m")
-    )
-    must = (
-        verdict.filter(F.col("__m") == 1)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    cannot = (
-        verdict.filter(F.col("__m") == 0)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    n_must, n_cannot = must.count(), cannot.count()
+        bad = dec.filter(~F.col("decision").isin("match", "non_match"))
+        if bad.limit(1).count():
+            raise ValueError("decision must be 'match' or 'non_match'")
+        touched = (
+            dec.select(F.col("src").alias("file_id"))
+            .unionByName(dec.select(F.col("dst").alias("file_id")))
+            .distinct()
+        )
+        touched_rows, _ = cut_lineage(
+            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
+        )
+        # a verdict on an id the prior resolution never saw would add a
+        # phantom edge (and phantom cluster rows) — reject the batch,
+        # naming every such id
+        unknown = touched.join(touched_rows, "file_id", "left_anti").collect()
+        if unknown:
+            ids = sorted(r["file_id"] for r in unknown)
+            raise ValueError(f"decision ids absent from prior_clusters: {ids}")
+        # non_match wins when both verdicts exist for one pair
+        verdict = dec.groupBy("src", "dst").agg(
+            F.min(F.when(F.col("decision") == "non_match", 0).otherwise(1)).alias("__m")
+        )
+        must, seen = cut_lineage(verdict.filter(F.col("__m") == 1).select("src", "dst"))
+        n_must = seen["rows"]
+        cannot, seen = cut_lineage(verdict.filter(F.col("__m") == 0).select("src", "dst"))
+        n_cannot = seen["rows"]
 
-    aff_clusters = (
-        touched_rows.select("cluster_id").distinct().localCheckpoint(eager=True)
-    )
-    unchanged = prior_clusters.join(
-        F.broadcast(aff_clusters), "cluster_id", "left_anti"
-    )
-    members = (
-        prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-        .select("file_id")
-        .localCheckpoint(eager=True)
-    )
-
-    # materialized evidence among the members: matched lineage pairs +
-    # sha star edges (members cover whole clusters, so the per-group
-    # minimum inside the member set equals the group's global minimum)
-    near = (
-        prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "left_id")),
-            "left_id",
-            "left_semi",
+        aff_clusters, seen = cut_lineage(touched_rows.select("cluster_id").distinct())
+        n_aff = seen["rows"]
+        unchanged = prior_clusters.join(
+            F.broadcast(aff_clusters), "cluster_id", "left_anti"
         )
-        .join(
-            F.broadcast(members.withColumnRenamed("file_id", "right_id")),
-            "right_id",
-            "left_semi",
+        # members cover whole clusters, so the per-group minimum inside the
+        # member set equals the sha group's global minimum
+        members, _ = cut_lineage(
+            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
+            .select("file_id")
         )
-        .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    )
-    _, exact = exact_duplicate_edges(
-        prior_features.join(F.broadcast(members), "file_id", "left_semi")
-    )
-    # overrides: remove the cannot edges (evidence edges are canonical
-    # src<dst already), add the must edges
-    evidence = near.unionByName(exact)
-    edges = (
-        evidence.join(F.broadcast(cannot), ["src", "dst"], "left_anti")
-        .unionByName(must)
-        .localCheckpoint(eager=True)
-    )
-    components = connected_components(edges, cfg)
-    singles = members.join(components, "file_id", "left_anti").select(
-        "file_id", F.col("file_id").alias("cluster_id")
-    )
-    clusters = unchanged.unionByName(components).unionByName(singles)
+        # overrides act on the evidence edges (canonical src < dst): the
+        # cannot edges are removed, the must edges added
+        clusters = replay_reclose(
+            members, unchanged, prior_features, prior_scored, cfg, must, cannot
+        )
 
     rows = [
         ("review", "match_overrides", float(n_must)),
         ("review", "non_match_overrides", float(n_cannot)),
-        ("review", "affected_prior_clusters", float(aff_clusters.count())),
-        ("review", "seconds", round(time.time() - t0, 3)),
-    ]
+        ("review", "affected_prior_clusters", float(n_aff)),
+    ] + clock.rows()
     metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
     return ReviewResult(clusters, metrics)

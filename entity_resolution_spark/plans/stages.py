@@ -1,6 +1,6 @@
-"""Stage clock and forced stage boundaries shared by the batch
-(``pipeline.resolve``) and incremental (``incremental.resolve_incremental``)
-plans.
+"""Stage clock and forced stage boundaries shared by every plan: batch
+(``pipeline.resolve``), incremental (``incremental.resolve_incremental``)
+and the lifecycle verbs (``retraction``, ``reviews``, ``rethreshold``).
 
 A forced boundary materializes a frame once, in dependency order, and
 CUTS ITS LINEAGE: the frame that comes back is a one-node plan over the

@@ -32,11 +32,14 @@ def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 # Registrations land in entity_resolution_spark/contract/*.py; import them
 # here so a single `from entity_resolution_spark.queries import SPARK_QUERIES`
-# sees everything.
+# sees everything. Registration order is the registry order: dedup_ops goes
+# first, so the record-linkage engine's oracles (pipeline_*,
+# incremental_clusters_light and the retract / review / re-threshold
+# lifecycle rows) are among its first 30 entries.
+from .contract import dedup_ops  # noqa: E402,F401
 from .contract import (  # noqa: E402,F401
     classifier_ops,
     core_ops,
-    dedup_ops,
     linkage_ops,
     quality_ops,
     sampling_ops,
@@ -45,289 +48,3 @@ from .contract import (  # noqa: E402,F401
     text_ops,
     warehouse_ops,
 )
-
-# The external correctness driver executes at most ~50 queries in dict
-# insertion order; with >50 registered, the tail never receives a
-# CORRECTNESS row. Re-rank so queries that have never been driver-verified
-# come first; everything else keeps its relative registration order. Every
-# query still runs in pytest (tests/test_queries_oracle.py parametrizes the
-# full registry), so the re-rank only changes driver-visibility, not
-# coverage.
-#
-# ROUND-5 ROTATION: the r1+r2+r3+r4 union covers 159 of 238 queries
-# driver-green; 79 have never received a green driver row. All 159
-# ever-green names move to the tail; the head is exactly the 79
-# never-verified in registration order, with lang_id_heuristic (the only
-# query whose sole driver record is an r1 `no_oracle` error, fixed since)
-# promoted into the first 10, with the three round-5-new queries
-# (retract_repair_clusters, review_override_clusters,
-# rethreshold_clusters_light) right behind it. After the ~50-slot
-# round-5 window the residual never-verified set for the round-6 head is
-# exactly these 32 (in this order; balanced_token_shards,
-# random_projection_reduce and embedding_drift_report were pushed out of
-# the window by the three new queries):
-#   balanced_token_shards, random_projection_reduce, embedding_drift_report
-#   encode_documents_ids, pack_token_ids_stream, bigram_lm_perplexity
-#   bpe_top_merges, source_overlap_matrix, nb_lang_predictions
-#   token_entropy_stats, ngram_novelty_scores, similarity_graph_triangles
-#   k_anonymity_customer, k_anonymity_summary_customer, iqr_outlier_orders
-#   pagerank_similarity_graph, heavy_hitters_per_window, hybrid_rrf_search
-#   pmi_collocations_top, funnel_view_click_purchase, hits_similarity_graph
-#   cohort_retention_weekly, k_core_similarity_graph, resample_user_events_daily
-#   markov_event_transitions, ab_test_events_value, association_rules_lineitem
-#   activity_streaks_users, ols_trend_value_by_type, chi2_lang_source_documents
-#   bfs_labels_similarity_graph, weighted_median_lineitem
-_DRIVER_PRIORITY = [
-    "skipping_report_events",
-    "join_size_estimate_events",
-    "range_boundaries_lineitem",
-    "schema_drift_events_halves",
-    "expectations_orders_report",
-    "lang_id_heuristic",
-    "retract_repair_clusters",
-    "review_override_clusters",
-    "rethreshold_clusters_light",
-    "key_skew_events_user",
-    "key_skew_summary_events",
-    "shuffle_shards_layout",
-    "stream_dedup_gate",
-    "decayed_user_value",
-    "weighted_jaccard_docs",
-    "wow_event_growth",
-    "rfm_customer_segments",
-    "attribution_last_touch",
-    "lpa_communities_ngram",
-    "bitext_margin_pairs",
-    "mad_outliers_orders",
-    "mixture_temperature_report",
-    "smith_waterman_part_names",
-    "rolling_daily_user_value",
-    "attribution_multi_touch",
-    "corrclust_pivot_ngram",
-    "dbscan_embeddings",
-    "bm25_search_topk",
-    "bpe_train_merges",
-    "gopher_quality_flags",
-    "weighted_docs_sample",
-    "blocking_quality_report",
-    "ivf_append_full_probe",
-    "length_batch_layout",
-    "padding_efficiency_report",
-    "source_sketch_similarity",
-    "zipf_fit_report",
-    "hll_vocab_estimate",
-    "bloom_membership_probe",
-    "cm_token_frequencies",
-    "stream_vocab_monitor",
-    "ccnet_perplexity_buckets",
-    "corpus_stats_report",
-    "stratified_docs_sample",
-    "embedding_decontamination",
-    "vocab_coverage_oov",
-    "contrastive_pair_mining",
-    "token_drift_report",
-    "kmeans_topic_assign",
-    "cluster_balanced_sample",
-    "balanced_token_shards",
-    "random_projection_reduce",
-    "embedding_drift_report",
-    "encode_documents_ids",
-    "pack_token_ids_stream",
-    "bigram_lm_perplexity",
-    "bpe_top_merges",
-    "source_overlap_matrix",
-    "nb_lang_predictions",
-    "token_entropy_stats",
-    "ngram_novelty_scores",
-    "similarity_graph_triangles",
-    "k_anonymity_customer",
-    "k_anonymity_summary_customer",
-    "iqr_outlier_orders",
-    "pagerank_similarity_graph",
-    "heavy_hitters_per_window",
-    "hybrid_rrf_search",
-    "pmi_collocations_top",
-    "funnel_view_click_purchase",
-    "hits_similarity_graph",
-    "cohort_retention_weekly",
-    "k_core_similarity_graph",
-    "resample_user_events_daily",
-    "markov_event_transitions",
-    "ab_test_events_value",
-    "association_rules_lineitem",
-    "activity_streaks_users",
-    "ols_trend_value_by_type",
-    "chi2_lang_source_documents",
-    "bfs_labels_similarity_graph",
-    "weighted_median_lineitem",
-    "pipeline_clusters",
-    "pipeline_resume_equivalence",
-    "multimodal_real_decode",
-    "self_knn_embeddings",
-    "ewma_user_value",
-    "cc_luhn_redact_customer",
-    "degree_profile_copurchase",
-    "holt_trend_user_value",
-    "stream_ewma_user_value",
-    "weekly_profile_events",
-    "encoding_damage_documents",
-    "fs_em_linkage",
-    "fs_em_linkage_tf",
-    "fs_linkage_clusters",
-    "fs_review_queue",
-    "fs_cluster_audit",
-    "fs_explain_weights",
-    "fs_pr_curve_report",
-    "one_to_one_matches",
-    "survivorship_golden_records",
-    "snm_candidate_pairs",
-    "metablocking_wnp_edges",
-    "ppjoin_token_jaccard",
-    "edit_distance_join_names",
-    "monge_elkan_part_names",
-    "soft_tfidf_part_names",
-    "tfidf_cosine_join_docs",
-    "canopy_blocking_docs",
-    "phonetic_soundex_keys",
-    "bcubed_nmi_ari_metrics",
-    "dedup_remove_spans",
-    "doc_line_dedup",
-    "c4_page_filter",
-    "boilerplate_segment_removal",
-    "cross_corpus_neardup",
-    "dedup_containment",
-    "semantic_dedup_embeddings",
-    "dedup_cluster_size_histogram",
-    "knn_join_topk_string_ids",
-    "quantize_embeddings_int8",
-    "sim_search_quantized_topk",
-    "chunk_documents_sliding",
-    "leakage_safe_split",
-    "dsir_importance_sample",
-    "cdc_apply_user_state",
-    "ivm_event_type_totals",
-    "cube_lineitem_revenue",
-    "compaction_plan_documents",
-    "zorder_layout_events",
-    "scd2_user_event_history",
-    "doc_repetition_stats",
-    "redact_customer_pii",
-    "tfidf_top_terms",
-    "multimodal_fake_features",
-    "f_jw_levenshtein",
-    "stream_interval_join",
-    "correlation_lineitem",
-    "mw_u_purchase_vs_click",
-    "gini_event_value",
-    "table_diff_event_snapshots",
-    "fingerprint_events_by_type",
-    "cusum_change_point_events",
-    "link_prediction_copurchase",
-    "mutual_information_docs",
-    "association_rules_capped",
-    "cohort_ltv_weekly",
-    "sortedness_events_ts",
-    "readability_lang_report",
-    "interarrival_quantiles_events",
-    "kaplan_meier_user_lifetimes",
-    "did_event_value",
-    "histogram_order_totalprice",
-    "quality_threshold_sweep",
-    "hll_merge_sources",
-    "modularity_copurchase_brand",
-    "assortativity_copurchase",
-    "hll_overlap_user_sets",
-    "hll_rolling_users_7d",
-    "attribution_markov_removal",
-    "attribution_shapley",
-    "weighted_quantiles_lineitem",
-    "new_vs_returning_weekly",
-    "funnel_stage_latency",
-    "robust_means_orders",
-    "categorical_assoc_lineitem",
-    "bootstrap_ci_event_value",
-    "effect_size_purchase_vs_view",
-    "tpch_q3_topk",
-    "tpch_q5_region_volume",
-    "tpch_q18_big_orders",
-    "star_clusters_ngram",
-    "pareto_frontier_parts",
-    "above_avg_orders",
-    "ntile_customer_deciles",
-    "fd_profile_lineitem",
-    "pk_candidates_orders",
-    "ind_fk_candidates",
-    "fuzzy_duplicate_orders",
-    "ks_drift_events_value",
-    "benford_orders_totalprice",
-    "knn_join_topk",
-    "ivf_knn_join_full_probe",
-    "dedup_embedding_cosine",
-    "text_quality_score",
-    "token_count_bpe",
-    "w1_topk_per_group",
-    "w2_running_sum",
-    "u2_set_except",
-    "u3_distinct_pairs",
-    "a8_semantic_buckets",
-    "f10_parse_probes",
-    "p2_null_drop",
-    "o5_longest_per_lang",
-    "p1_threshold_filter",
-    "a2_group_count",
-    "a3_a4_distinct_null_counts",
-    "o2_topk",
-    "j2_outer_join",
-    "u1_union_align",
-    "a5_jaccard_sets",
-    "a1_topk_mean",
-    "p5_freq_filter",
-    "a7_weighted_score",
-    "dedup_exact_sha",
-    "f15_sha_invariant",
-    "tpch_q1_agg",
-    "token_count_ws",
-    "rollup_lineitem_revenue",
-    "pivot_event_type_counts",
-    "exact_quantiles_lineitem",
-    "json_props_extract",
-    "dedup_ngram_jaccard",
-    "sim_search_topk",
-    "sim_search_ivf_full_probe",
-    "j_semi_join",
-    "j_anti_join",
-    "minhash_signatures",
-    "dedup_minhash_lsh",
-    "simhash_values",
-    "dedup_simhash",
-    "corpus_curation",
-    "cc_clusters_ngram",
-    "doc_fingerprints",
-    "asof_join_events_orders",
-    "range_join_events_in_order_window",
-    "pipeline_clusters_light",
-    "dup_span_stats",
-    "incremental_clusters_light",
-    "label_centroids",
-    "ngram_decontamination",
-    "cluster_agreement_metrics",
-    "split_assign",
-    "source_cap_sample",
-    "token_budget_sample",
-    "sequence_packing",
-    "windowed_event_counts",
-    "sessionize_events",
-    "sessionize_events_segmented",
-    "session_window_counts",
-]
-
-
-def _rerank() -> None:
-    ranked = {n: SPARK_QUERIES[n] for n in _DRIVER_PRIORITY if n in SPARK_QUERIES}
-    for n, fn in SPARK_QUERIES.items():
-        ranked.setdefault(n, fn)
-    SPARK_QUERIES.clear()
-    SPARK_QUERIES.update(ranked)
-
-
-_rerank()

@@ -12,10 +12,13 @@ from __future__ import annotations
 
 import hashlib
 import os
+import stat
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from .functions._native_build import _private, cache_dir
 
 _PYFILES_SHIPPED: set[tuple[int, str]] = set()
 
@@ -29,6 +32,12 @@ def ensure_py_files(spark: SparkSession) -> None:
     named by content hash, and ``addPyFile``'d. On a real cluster the job is
     submitted with --py-files and this becomes a no-op re-add of the same
     artifact.
+
+    Every worker imports the zip, so it is only ever taken from a directory
+    no other user can write to: the native-kernel cache
+    (``_native_build.cache_dir()``), where a cached zip is reused only if it
+    passes the same owner and mode check as a cached kernel and is rebuilt
+    otherwise, or a fresh private temp dir when there is no such cache.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     hasher = hashlib.sha256()
@@ -45,17 +54,19 @@ def ensure_py_files(spark: SparkSession) -> None:
     key = (id(spark), digest)
     if key in _PYFILES_SHIPPED:
         return
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"entity_resolution_spark_{digest}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
+    directory = cache_dir() or tempfile.mkdtemp(prefix="ers-pyfiles-")
+    zip_path = os.path.join(directory, f"entity_resolution_spark_{digest}.zip")
+    if not _private(zip_path, stat.S_ISREG):
+        # build into a per-process name, then atomically publish: racing
+        # drivers all rename to the same content-addressed path
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
             for p in py_files:
                 arc = os.path.join(
                     "entity_resolution_spark", os.path.relpath(p, pkg_dir)
                 )
                 zf.write(p, arc)
+        os.chmod(tmp, 0o644)
         os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     _PYFILES_SHIPPED.add(key)

@@ -10,9 +10,6 @@ Iceberg, parquet, ORC, CSV or JSONL. This module provides:
   (the table-level form of the reference's column-membership guard,
   entity_resolution.py:187-189 / SURVEY.md §2.2 P4): missing/mistyped
   columns fail fast with a complete report, extra columns pass through;
-- ``load_source`` — Iceberg catalog read with graceful parquet fallback
-  (the sandbox has no Iceberg runtime jar; a cluster with one reads the
-  same call as a real catalog table — SURVEY.md §7.3 item 6);
 - ``write_partitioned`` — layout helper: clusters/lineage tables
   partitioned by a stable bucket of the key so downstream joins prune.
 """
@@ -96,23 +93,6 @@ def read_repo_files(
     if validate:
         df = validate_schema(df)
     return df
-
-
-def load_source(spark: SparkSession, table_or_path: str) -> DataFrame:
-    """Iceberg catalog table if resolvable, else a path read. One call site
-    for both worlds keeps pipeline code cluster/sandbox agnostic."""
-    if "/" not in table_or_path:
-        try:
-            return spark.read.format("iceberg").load(table_or_path)
-        except Exception:
-            try:
-                return spark.table(table_or_path)
-            except Exception as exc:
-                raise ValueError(
-                    f"'{table_or_path}' is neither an Iceberg/catalog table "
-                    f"nor a path: {exc}"
-                ) from exc
-    return read_repo_files(spark, table_or_path)
 
 
 def write_partitioned(

@@ -155,6 +155,45 @@ def test_incremental_stop_keys_are_surfaced(spark):
     assert len(dropped) == 1 and dropped[0].block_size == 12
 
 
+def test_fold_dropped_keys_metric_counts_touched_stop_keys(spark):
+    """The fold's candidates.dropped_keys row, observed by the candidates
+    job, equals incremental_dropped_keys over the same two indexes; a delta
+    of exact duplicates adds no index entries and reports 0."""
+    import dataclasses
+
+    from entity_resolution_spark.plans.incremental import incremental_dropped_keys
+
+    # every key an old and a new row share is over this limit
+    cfg = dataclasses.replace(PipelineConfig(), block_key_drop_limit=1)
+    files = generate_repo_files(spark, 60).localCheckpoint()
+    old, new = _split(files)
+    prior = resolve(old, cfg)
+
+    def dropped_metric(inc):
+        m = {(r.stage, r.metric): r.value for r in inc.metrics.collect()}
+        return m[("candidates", "dropped_keys")]
+
+    inc = resolve_incremental(
+        prior.features, prior.clusters, new, cfg, prior_blocks=prior.blocks
+    )
+    new_blocks = inc.blocks.exceptAll(prior.blocks)
+    expected = incremental_dropped_keys(prior.blocks, new_blocks, cfg).count()
+    assert expected > 0
+    assert dropped_metric(inc) == expected
+
+    # copies of old rows under larger ids never become their sha group's
+    # representative, so they add no blocking-index entries
+    dups = (
+        old.filter(F.col("content").isNotNull())
+        .limit(3)
+        .withColumn("file_id", F.col("file_id") + F.lit(1 << 40))
+    )
+    inc = resolve_incremental(
+        prior.features, prior.clusters, dups, cfg, prior_blocks=prior.blocks
+    )
+    assert dropped_metric(inc) == 0
+
+
 # ---------------------------------------------------------------------------
 # Retraction (right-to-be-forgotten) repair
 # ---------------------------------------------------------------------------

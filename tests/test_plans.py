@@ -173,12 +173,8 @@ def test_line_dedup_stays_whole_stage_codegen(spark):
 
 
 def test_no_module_global_scoring_state(spark):
-    """The _DEFAULT_CTX shim is retired: the module-level helpers raise
-    (they silently reported 0.0 / released the wrong cache once resolve()
-    threaded per-call contexts), score_pairs without an explicit ctx
-    builds a fresh one per call and attaches it to the result."""
-    import pytest
-
+    """The _DEFAULT_CTX shim is retired: score_pairs without an explicit
+    ctx builds a fresh one per call and attaches it to the result."""
     from entity_resolution_spark.operators import scoring
     from entity_resolution_spark.datagen import generate_repo_files
     from entity_resolution_spark.operators.blocking import (
@@ -189,10 +185,6 @@ def test_no_module_global_scoring_state(spark):
     from entity_resolution_spark.operators.candidates import candidate_pairs
 
     assert not hasattr(scoring, "_DEFAULT_CTX")
-    with pytest.raises(RuntimeError, match="ScoringContext"):
-        scoring.last_p1_fill_seconds()
-    with pytest.raises(RuntimeError, match="ScoringContext"):
-        scoring.release_phase1()
 
     feats = with_features(generate_repo_files(spark, 40))
     pairs = candidate_pairs(exploded_blocks(with_block_keys(feats)))
