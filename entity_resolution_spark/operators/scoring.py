@@ -42,7 +42,7 @@ caused heap-thrash anti-scaling at local[32].
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -82,6 +82,32 @@ class ScoringContext:
         phase 1)."""
         while self._phase1:
             self._phase1.pop().unpersist()
+
+
+def length_bound(l_n: str, r_n: str) -> Column:
+    """Upper bound on the edit ratio from the two normalized lengths."""
+    l_n, r_n = F.col(l_n), F.col(r_n)
+    return F.when(
+        (l_n > 0) & (r_n > 0), 200.0 * F.least(l_n, r_n) / (l_n + r_n)
+    ).otherwise(F.lit(0.0))
+
+
+def base_score(cfg: PipelineConfig, jaccard: str, jw: str) -> Column:
+    """The blend's token-Jaccard and path-JW terms."""
+    return cfg.w_jaccard * 100.0 * F.col(jaccard) + cfg.w_path * 100.0 * F.col(jw)
+
+
+def phase1_bound(cfg: PipelineConfig, ub: Column, base: Column) -> Column:
+    """Phase 1's bound on the blended score; a pair below
+    :func:`reject_line` can never match. Re-threshold calls it too, so the
+    two agree float for float."""
+    return cfg.w_content * ub + base
+
+
+def reject_line(cfg: PipelineConfig) -> float:
+    """The threshold less w_content*0.5: lev_ratio is banker's-rounded, so
+    the true blend can exceed the unrounded bound by up to that slack."""
+    return cfg.similarity_threshold - cfg.w_content * 0.5
 
 
 @pandas_udf(T.DoubleType())
@@ -145,10 +171,6 @@ def score_pairs(
     union_sz = F.size("l_tokens") + F.size("r_tokens") - inter
     jac = F.when(union_sz > 0, inter.cast("double") / union_sz).otherwise(F.lit(0.0))
     jw = _jw_udf(F.col("l_base"), F.col("r_base"))
-    ub = F.when(
-        (F.col("l_n") > 0) & (F.col("r_n") > 0),
-        200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
-    ).otherwise(F.lit(0.0))
 
     # Phase 1 runs as TWO materialized passes, not one projection. In the
     # fused plan, ExtractPythonUDFs hoists the JW UDF into an
@@ -170,7 +192,7 @@ def score_pairs(
         "right_id",
         "block_key",
         jac.alias("token_jaccard"),
-        ub.alias("ub"),
+        length_bound("l_n", "r_n").alias("ub"),
         F.coalesce("l_base", F.lit("")).alias("l_base"),
         F.coalesce("r_base", F.lit("")).alias("r_base"),
     ).persist()
@@ -238,20 +260,14 @@ def score_pairs(
         "token_jaccard",
         "path_jw",
         "ub",
-    ).withColumn(
-        "base_score",
-        cfg.w_jaccard * 100.0 * F.col("token_jaccard") + cfg.w_path * 100.0 * F.col("path_jw"),
-    ).persist()
+    ).withColumn("base_score", base_score(cfg, "token_jaccard", "path_jw")).persist()
     ctx._phase1.append(p1)
     p1.count()
     ctx.p1_fill_seconds = round(_time.time() - _t0, 3)
     # p1 is filled — the slim intermediate (with its basename payload) can go
     slim.unpersist()
-    # lev_ratio is banker's-rounded to an int, so the true blend can exceed
-    # the unrounded length bound by up to w_content*0.5 — widen the gate by
-    # that slack so "bound misses threshold" really means "can never match"
-    bound = cfg.w_content * F.col("ub") + F.col("base_score")
-    reject_below = cfg.similarity_threshold - cfg.w_content * 0.5
+    bound = phase1_bound(cfg, F.col("ub"), F.col("base_score"))
+    reject_below = reject_line(cfg)
 
     rejected = (
         p1.filter(bound < reject_below)

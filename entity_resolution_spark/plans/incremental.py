@@ -27,20 +27,19 @@ Cost per increment is DELTA-PROPORTIONAL — the corpus is scanned
   prior clusters replay their star edges iff an endpoint belongs to them;
   every other row keeps its prior assignment verbatim.
 
+That cluster repair (``affected_census`` + ``reclose``) is the one the
+fold, ``retraction`` and ``reviews`` share; each supplies only the members
+and edges of the re-close.
+
 The broadcast frames (digests, block keys, pair ids, touched clusters) are
 all O(delta x keys); for a delta that is a large fraction of the corpus,
 run the batch ``resolve()`` instead — it is the same price at that point.
 
-Stage boundaries: every delta frame with more than one consumer (new
-features, affected reps, new index entries, pairs, scored pairs, new edges,
-the folded clusters) closes its stage at a forced boundary shared with the
-batch plan (``stages.StageClock``): materialized once, in dependency
-order, as a lineage-free local checkpoint whose row count feeds the
-metrics. Cutting the lineage matters twice here: these frames carry
-broadcast-hinted joins, and Spark's cache matching never hits a persisted
-frame with such a plan, so without the cut each consumer re-runs the
-subtree (incl. the band UDF over the old corpus); and the folded clusters
-are read by both the metrics and the caller's state write.
+Stage boundaries: every delta frame with more than one consumer closes
+its stage at a forced boundary shared with the batch plan
+(``stages.StageClock``). These frames carry broadcast-hinted joins, which
+Spark's cache matching never hits, so without the lineage cut each
+consumer would re-run the subtree (incl. the band UDF over the old corpus).
 
 Equivalence: with no skew cap crossed, ``resolve_incremental(A, B)``
 produces exactly the clusters of ``resolve(A ∪ B)`` (asserted in
@@ -63,11 +62,18 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.blocking import exploded_blocks, with_block_keys, with_features
+from ..operators.blocking import with_features
 from ..operators.candidates import dropped_block_keys, pair_budget_k
-from ..operators.clustering import connected_components
+from ..operators.clustering import assign_clusters, connected_components
 from ..operators.scoring import matched_edges, score_pairs
-from .pipeline import exact_duplicate_edges, sha_group_key
+from .pipeline import (
+    close_clusters,
+    exact_duplicate_edges,
+    prepare_files,
+    rep_blocks,
+    scoring_stage,
+    sha_group_key,
+)
 from .stages import StageClock, cut_lineage
 
 
@@ -101,17 +107,11 @@ def incremental_dropped_keys(
 def incremental_candidate_pairs(
     old_blocks: DataFrame, new_blocks: DataFrame, cfg: PipelineConfig | None = None
 ) -> DataFrame:
-    """old index x new index -> (left_id, right_id, block_key) where the
-    right side is new. Same skew ladder semantics as the batch
-    candidate_pairs: stop-keys dropped (surfaced via
-    incremental_dropped_keys), per-block pair budget hash-thinned
-    deterministically (the batch path's pair_budget_k over the implied
-    old-x-new pair count), cross-key dedup keeps the min block_key.
-
-    Delta-proportional: only the touched part of the old index is read
-    (_live_old), and everything downstream (census, joins, budgets) runs on
-    the delta-bounded live subset.
-    """
+    """old index x new index -> (left_id, right_id, block_key), one side
+    new, with the batch candidate_pairs' skew ladder: stop-keys dropped
+    (see incremental_dropped_keys), per-block budgets hash-thinned by
+    pair_budget_k over the implied old-x-new count, min block_key kept.
+    Only the touched part of the old index (_live_old) is read."""
     return _candidates(old_blocks, new_blocks, cfg or PipelineConfig(), None)
 
 
@@ -167,6 +167,44 @@ def _candidates(
     return pairs.groupBy("left_id", "right_id").agg(F.min("block_key").alias("block_key"))
 
 
+def endpoint_ids(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """The distinct ids at either end of ``pairs`` (columns a, b)."""
+    ids = pairs.select(F.col(a).alias("file_id"))
+    return ids.unionByName(pairs.select(F.col(b).alias("file_id"))).distinct()
+
+
+def affected_census(
+    prior_clusters: DataFrame, touched: DataFrame
+) -> tuple[DataFrame, DataFrame, int]:
+    """Repair, part 1: touched (file_id) rows -> (prior rows of the clusters
+    they touch, prior rows of every other cluster, number of affected
+    clusters). The change-bounded affected ids are cut and broadcast, so
+    the prior clusters are scanned, never shuffled."""
+    aff_clusters, seen = cut_lineage(
+        prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
+        .select("cluster_id")
+        .distinct()
+    )
+
+    def part(how):
+        return prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", how).select(
+            "file_id", "cluster_id"
+        )
+
+    return part("left_semi"), part("left_anti"), seen["rows"]
+
+
+def reclose(
+    unchanged: DataFrame, members: DataFrame, edges: DataFrame, cfg: PipelineConfig
+) -> tuple[DataFrame, int]:
+    """Repair, part 2: ``unchanged`` ∪ ``members`` re-closed over ``edges``
+    (whose endpoints must all be members), cut at a boundary; returns the
+    clusters and their number."""
+    return close_clusters(
+        unchanged.unionByName(assign_clusters(members, connected_components(edges, cfg)))
+    )
+
+
 def resolve_incremental(
     prior_features: DataFrame,
     prior_clusters: DataFrame,
@@ -183,17 +221,7 @@ def resolve_incremental(
     """
     cfg = cfg or PipelineConfig()
     spark = new_files.sparkSession
-    from ..session import ensure_py_files
-    from ..sources.readers import validate_schema
-
-    ensure_py_files(spark)
-    validate_schema(new_files)
-    if "file_id" not in new_files.columns:
-        id_cols = [c for c in ("repo", "path", "commit") if c in new_files.columns]
-        new_files = new_files.withColumn(
-            "file_id", F.xxhash64(*[F.col(c) for c in id_cols])
-        )
-
+    new_files = prepare_files(new_files)
     clock = StageClock()
 
     new_feat, n_new = clock.boundary("features_new", with_features(new_files, cfg))
@@ -225,21 +253,13 @@ def resolve_incremental(
         # no reusable index: recompute old reps' keys (O(corpus) map-side
         # work, no corpus shuffle — the documented cost of not persisting
         # the blocking index between folds)
-        old_rep_rows, _ = exact_duplicate_edges(prior_features)
-        old_blocks = exploded_blocks(with_block_keys(old_rep_rows, cfg)).filter(
-            ~F.col("block_key").startswith("sha:")
-        )
+        old_blocks = rep_blocks(exact_duplicate_edges(prior_features)[0], cfg)
     else:
         # old entries whose file_id is no longer a rep (its sha group gained
         # a smaller-id member) are harmless: their pairs drop at the scoring
         # join and the new rep carries its own keys
         old_blocks = prior_blocks
-    new_blocks, n_new_entries = clock.boundary(
-        "blocking_new",
-        exploded_blocks(with_block_keys(new_reps, cfg)).filter(
-            ~F.col("block_key").startswith("sha:")
-        ),
-    )
+    new_blocks, n_new_entries = clock.boundary("blocking_new", rep_blocks(new_reps, cfg))
 
     # the candidates job also counts the stop-keys it drops (a second probe
     # of the corpus-sized old index would cost as much as the pairs); with
@@ -253,22 +273,14 @@ def resolve_incremental(
     # (broadcast of the delta-bounded id set) — the corpus light-feature
     # frame is never shuffled into the scoring joins; the delta-bounded
     # probe result is materialized so the scoring joins read it once
-    pair_ids = (
-        pairs.select(F.col("left_id").alias("file_id"))
-        .unionByName(pairs.select(F.col("right_id").alias("file_id")))
-        .distinct()
-    )
     feat_scoring, _ = cut_lineage(
-        feat_all.join(F.broadcast(pair_ids), "file_id", "left_semi")
+        feat_all.join(
+            F.broadcast(endpoint_ids(pairs, "left_id", "right_id")), "file_id", "left_semi"
+        )
     )
-    from ..operators.scoring import ScoringContext
-
-    scoring_ctx = ScoringContext()
-    scored, n_scored = clock.boundary(
-        "scoring", score_pairs(pairs, feat_scoring, cfg, ctx=scoring_ctx)
+    scored, n_scored, _ = scoring_stage(
+        clock, lambda ctx: score_pairs(pairs, feat_scoring, cfg, ctx=ctx)
     )
-    clock.seconds["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
-    scoring_ctx.release_phase1()
 
     near = matched_edges(scored, cfg).select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
@@ -281,54 +293,36 @@ def resolve_incremental(
     # delta). They are delta-bounded — checkpointing them is cheap.
     new_edges, _ = clock.boundary("edges", near.unionByName(exact_edges))
 
-    # Connected components over AFFECTED components only: prior clusters
-    # touched by any new edge replay their star edges; everything else
-    # keeps its prior assignment untouched. CC input is delta-bounded —
-    # O(new edges + members of touched clusters), not O(corpus).
+    # The shared repair over AFFECTED components only: prior clusters
+    # touched by a new edge replay their star edges; everything else keeps
+    # its prior assignment. CC input is delta-bounded — O(new edges +
+    # members of touched clusters), not O(corpus). Every old endpoint of a
+    # new edge is touched, so it is an affected member.
     with clock.timed("clustering"):
-        touched = (
-            new_edges.select(F.col("src").alias("file_id"))
-            .unionByName(new_edges.select(F.col("dst").alias("file_id")))
-            .distinct()
+        affected, unchanged, n_aff = affected_census(
+            prior_clusters, endpoint_ids(new_edges, "src", "dst")
         )
-        aff_clusters, seen = cut_lineage(
-            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-            .select("cluster_id")
-            .distinct()
+        star_aff = affected.filter(F.col("file_id") != F.col("cluster_id")).select(
+            F.col("cluster_id").alias("src"), F.col("file_id").alias("dst")
         )
-        n_aff = seen["rows"]
-        star_aff = (
-            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-            .filter(F.col("file_id") != F.col("cluster_id"))
-            .select(F.col("cluster_id").alias("src"), F.col("file_id").alias("dst"))
+        clusters, n_clusters = reclose(
+            unchanged,
+            affected.select("file_id").unionByName(new_ids),
+            new_edges.unionByName(star_aff),
+            cfg,
         )
-        components = connected_components(new_edges.unionByName(star_aff), cfg)
-        unchanged = prior_clusters.join(
-            F.broadcast(aff_clusters), "cluster_id", "left_anti"
-        ).select("file_id", "cluster_id")
-        new_singletons = (
-            new_ids.join(components, "file_id", "left_anti")
-            .select("file_id", F.col("file_id").alias("cluster_id"))
-        )
-        # a boundary: the state write and the metrics both read it. Every
-        # cluster has exactly one root row (file_id = cluster_id, the
-        # component minimum), so counting roots counts clusters in the
-        # same job.
-        clusters, seen = cut_lineage(
-            unchanged.unionByName(components).unionByName(new_singletons),
-            roots=F.sum((F.col("file_id") == F.col("cluster_id")).cast("long")),
-        )
-        n_clusters = seen["roots"] or 0
 
-    rows = [
-        ("input_new", "rows", float(n_new)),
-        ("candidates", "pairs", float(n_pairs)),
-        ("candidates", "dropped_keys", float(n_dropped)),
-        ("scoring", "scored_pairs", float(n_scored)),
-        ("clustering", "affected_prior_clusters", float(n_aff)),
-        ("clustering", "clusters", float(n_clusters)),
-    ] + clock.rows()
-    metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
+    metrics = clock.metrics(
+        spark,
+        [
+            ("input_new", "rows", float(n_new)),
+            ("candidates", "pairs", float(n_pairs)),
+            ("candidates", "dropped_keys", float(n_dropped)),
+            ("scoring", "scored_pairs", float(n_scored)),
+            ("clustering", "affected_prior_clusters", float(n_aff)),
+            ("clustering", "clusters", float(n_clusters)),
+        ],
+    )
     return IncrementalResult(
         feat_all, scored, clusters, metrics, old_blocks.unionByName(new_blocks)
     )

@@ -31,7 +31,7 @@ from ..operators.candidates import candidate_pairs, dropped_block_keys
 from ..operators.clustering import assign_clusters, connected_components
 from ..operators.scoring import ScoringContext, matched_edges, score_pairs
 from ..sources.io import StageStore
-from .stages import StageClock
+from .stages import StageClock, cut_lineage
 
 
 @dataclass
@@ -87,6 +87,59 @@ def exact_duplicate_edges(feat: DataFrame) -> tuple[DataFrame, DataFrame]:
     return reps, edges
 
 
+def prepare_files(files: DataFrame) -> DataFrame:
+    """Prologue of resolve() and the fold: ship the package to the workers,
+    reject a malformed frame with a complete report (readers.py), and give
+    id-less rows the deterministic ``file_id`` both plans must agree on."""
+    from ..session import ensure_py_files
+    from ..sources.readers import validate_schema
+
+    ensure_py_files(files.sparkSession)
+    validate_schema(files)
+    if "file_id" not in files.columns:
+        # monotonically_increasing_id() is partition-dependent, which made
+        # cluster_id = min(file_id) nondeterministic across
+        # runs/parallelism. A content-address over the identity columns is
+        # stable under any partitioning (64-bit birthday collisions only
+        # matter past ~10^9 files; callers at that scale should assign
+        # their own ids).
+        id_cols = [c for c in ("repo", "path", "commit") if c in files.columns]
+        files = files.withColumn("file_id", F.xxhash64(*[F.col(c) for c in id_cols]))
+    return files
+
+
+def rep_blocks(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(block_key, file_id) index over representatives, minus the sha keys
+    (singletons among representatives by construction)."""
+    return exploded_blocks(with_block_keys(reps, cfg)).filter(
+        ~F.col("block_key").startswith("sha:")
+    )
+
+
+def scoring_stage(clock: StageClock, build) -> tuple[DataFrame, int, ScoringContext]:
+    """(scored, rows, context): ``build(ctx)`` scores under a fresh
+    ScoringContext and the result closes at the ``scoring`` boundary."""
+    ctx = ScoringContext()
+    # score_pairs fills phase 1 eagerly at build time, before the
+    # boundary's timer starts: that fill is its own, disjoint
+    # ``scoring_p1_fill`` row (this call's context, so interleaved plans
+    # don't cross-contaminate); ``scoring`` times only phase 2. Phase 1's
+    # cache goes once the scored union is materialized.
+    scored, n_scored = clock.boundary("scoring", build(ctx))
+    clock.seconds["scoring_p1_fill"] = ctx.p1_fill_seconds
+    ctx.release_phase1()
+    return scored, n_scored, ctx
+
+
+def close_clusters(clusters: DataFrame) -> tuple[DataFrame, int]:
+    """(``clusters`` cut at a boundary, their number): each cluster has one
+    root row (file_id = cluster_id), counted by the checkpoint job."""
+    out, seen = cut_lineage(
+        clusters, roots=F.sum((F.col("file_id") == F.col("cluster_id")).cast("long"))
+    )
+    return out, seen["roots"] or 0
+
+
 def resolve(
     files: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -97,26 +150,7 @@ def resolve(
     content[, file_id]) frame."""
     cfg = cfg or PipelineConfig()
     spark = spark or files.sparkSession
-    from ..session import ensure_py_files
-
-    ensure_py_files(spark)  # pandas UDFs must import this package on workers
-
-    # fail fast with a complete report instead of an unresolved-column error
-    # deep inside the feature/blocking plan (P4 semantics, readers.py)
-    from ..sources.readers import validate_schema
-
-    validate_schema(files)
-
-    if "file_id" not in files.columns:
-        # deterministic fallback id: monotonically_increasing_id() is
-        # partition-dependent, which made cluster_id = min(file_id)
-        # nondeterministic across runs/parallelism. A content-address over
-        # the identity columns is stable under any partitioning (64-bit
-        # birthday collisions only matter past ~10^9 files; callers at that
-        # scale should assign their own ids).
-        id_cols = [c for c in ("repo", "path", "commit") if c in files.columns]
-        files = files.withColumn("file_id", F.xxhash64(*[F.col(c) for c in id_cols]))
-
+    files = prepare_files(files)
     clock = StageClock(parquet_backed=store is not None)
 
     def _stage(name: str, compute, partition_by=None) -> DataFrame:
@@ -138,56 +172,43 @@ def resolve(
     reps, exact_edges = exact_duplicate_edges(feat)
     reps, _ = clock.boundary("exact_collapse", reps)
 
-    keyed = with_block_keys(reps, cfg)
-    # sha keys are singletons among representatives by construction — drop
-    # them before the explode so the blocking index stays lean.
     # Persisted: the blocking index is read by candidate generation AND the
     # block-census metrics/dropped-keys reports — without the cache each
     # reader re-runs the MinHash band UDF over the whole corpus (measured
     # as most of the metrics stage's cost). Fill happens inside the
     # candidates stage; the frame is only (block_key, file_id).
-    blocks = exploded_blocks(keyed).filter(
-        ~F.col("block_key").startswith("sha:")
-    ).persist()
+    blocks = rep_blocks(reps, cfg).persist()
 
     pairs, n_pairs = clock.boundary(
         "candidates", _stage("pairs", lambda: candidate_pairs(blocks, cfg))
     )
-    scoring_ctx = ScoringContext()
-    scored, n_scored = clock.boundary(
-        "scoring",
-        _stage("scored", lambda: score_pairs(pairs, reps, cfg, ctx=scoring_ctx)),
+    scored, n_scored, scoring_ctx = scoring_stage(
+        clock,
+        lambda ctx: _stage("scored", lambda: score_pairs(pairs, reps, cfg, ctx=ctx)),
     )
-    # the eager phase-1 fill inside score_pairs runs at build time, before
-    # the boundary's timer starts — surface it as its own stage row (read
-    # from THIS call's context, so interleaved resolves don't
-    # cross-contaminate). DISJOINT accounting: 'scoring_p1_fill' covers the
-    # phase-1 census + JW + cache fill; 'scoring' covers ONLY the phase-2
-    # materialization, which reads phase 1 from cache — the two never
-    # overlap, so the stage rows are additive to the job total.
-    clock.seconds["scoring_p1_fill"] = scoring_ctx.p1_fill_seconds
-    # the scored union is materialized (checkpoint or StageStore write) —
-    # phase-1's internal cache is no longer needed
-    scoring_ctx.release_phase1()
 
     near_edges = matched_edges(scored, cfg)
     all_edges = near_edges.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
     ).unionByName(exact_edges)
 
+    # the clusters close at a boundary: the metrics, the caller's state
+    # write and every later read use its rows, not a re-run of the
+    # assignment join; with a StageStore the parquet read is the boundary
     with clock.timed("clustering"):
         components = connected_components(all_edges, cfg)
-    clusters = _stage("clusters", lambda: assign_clusters(feat, components))
+        if store is None:
+            clusters, n_clusters = close_clusters(assign_clusters(feat, components))
+    if store is not None:
+        clusters = _stage("clusters", lambda: assign_clusters(feat, components))
+        n_clusters = clusters.where(F.col("file_id") == F.col("cluster_id")).count()
 
     dropped = dropped_block_keys(blocks, cfg)
     with clock.timed("metrics"):
-        n_matched = near_edges.count()
-        metrics = _metrics_table(
-            spark, cfg, n_files, n_pairs, n_scored, n_matched, clusters, blocks
+        rows = _metric_rows(
+            cfg, n_files, n_pairs, n_scored, near_edges.count(), n_clusters, blocks
         )
-    metrics = metrics.unionByName(
-        spark.createDataFrame(clock.rows(), "stage string, metric string, value double")
-    )
+    metrics = clock.metrics(spark, rows)
     if store is not None:
         store.write("metrics", metrics)
         store.write("lineage", scored)  # every pair decision, with block_key provenance
@@ -200,23 +221,21 @@ def resolve(
 def _build_metrics(spark, files, pairs, scored, clusters, cfg, blocks=None) -> DataFrame:
     """Stage-level metrics table over a resolve's frames, counting each
     one (resolve() itself passes the counts its boundaries took to
-    :func:`_metrics_table`)."""
+    :func:`_metric_rows`)."""
     agg = scored.agg(
         F.count("*").alias("n"),
         F.coalesce(F.sum((F.col("score") >= cfg.similarity_threshold).cast("long")), F.lit(0)).alias("m"),
     ).collect()[0]
-    return _metrics_table(
-        spark, cfg, files.count(), pairs.count(), agg["n"], agg["m"], clusters, blocks
-    )
-
-
-def _metrics_table(
-    spark, cfg, n_files, n_pairs, n_scored, n_matched, clusters, blocks=None
-) -> DataFrame:
-    """Stage-level metrics table from the stage sizes; one pass over the
-    clusters and one over the block census. At scale these are the
-    dashboards that prove the skew handling worked."""
     n_clusters = clusters.select("cluster_id").distinct().count()
+    rows = _metric_rows(
+        cfg, files.count(), pairs.count(), agg["n"], agg["m"], n_clusters, blocks
+    )
+    return StageClock().metrics(spark, rows)
+
+
+def _metric_rows(cfg, n_files, n_pairs, n_scored, n_matched, n_clusters, blocks=None):
+    """Stage-level metric rows from the stage sizes plus one pass over the
+    block census: the dashboards that prove the skew handling worked."""
     # whether the compiled LCS/JW kernel loaded (driver probe; workers share
     # the same fs + content-addressed .so). A silent fallback to the pure-
     # Python kernel is ~8x slower scoring — this row makes slow samples
@@ -250,4 +269,4 @@ def _metrics_table(
             ("blocking", "salted_blocks", float(b["salted_blocks"] or 0)),
             ("blocking", "dropped_keys", float(b["dropped_keys"] or 0)),
         ]
-    return spark.createDataFrame(rows, "stage string, metric string, value double")
+    return rows

@@ -13,8 +13,8 @@ just to change one comparison; this plan reuses the scored lineage:
   phase-1 bound sat below the original reject line (so their content term
   was never computed) but reaches the new one. The bound is recomputed
   from the lineage's own stored ``token_jaccard``/``path_jw`` plus the
-  feature lengths with the SAME JVM expression trees scoring used, so the
-  original reject decision is reproduced float-for-float (a 1e-6 slack
+  feature lengths by scoring's own ``phase1_bound``, so the original
+  reject decision is reproduced float-for-float (a 1e-6 slack
   makes the suspect set a safe superset — re-scoring a pair that was
   actually scored exactly is idempotent: same kernel, same operands).
 
@@ -35,7 +35,14 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..operators.clustering import assign_clusters, connected_components
-from ..operators.scoring import matched_edges, score_pairs
+from ..operators.scoring import (
+    base_score,
+    length_bound,
+    matched_edges,
+    phase1_bound,
+    reject_line,
+    score_pairs,
+)
 from .pipeline import exact_duplicate_edges
 from .stages import StageClock, cut_lineage
 
@@ -77,23 +84,17 @@ def rethreshold_clusters(
             j = scored.join(lo.hint("shuffle_hash"), "left_id").join(
                 ro.hint("shuffle_hash"), "right_id"
             )
-            # identical expression trees to scoring's phase 1, fed the
-            # stored jaccard/jw doubles -> identical bound floats
-            ub = F.when(
-                (F.col("l_n") > 0) & (F.col("r_n") > 0),
-                200.0 * F.least("l_n", "r_n") / (F.col("l_n") + F.col("r_n")),
-            ).otherwise(F.lit(0.0))
-            base = (
-                cfg.w_jaccard * 100.0 * F.col("token_jaccard")
-                + cfg.w_path * 100.0 * F.col("path_jw")
+            # scoring's own bound, fed the stored jaccard/jw doubles ->
+            # identical bound floats
+            bound = phase1_bound(
+                cfg,
+                length_bound("l_n", "r_n"),
+                base_score(cfg, "token_jaccard", "path_jw"),
             )
-            bound = cfg.w_content * ub + base
-            old_rb = cfg.similarity_threshold - cfg.w_content * 0.5
-            new_rb = float(new_threshold) - cfg.w_content * 0.5
             suspects, seen = cut_lineage(
-                j.filter((bound < old_rb + 1e-6) & (bound >= new_rb)).select(
-                    "left_id", "right_id", "block_key"
-                )
+                j.filter(
+                    (bound < reject_line(cfg) + 1e-6) & (bound >= reject_line(new_cfg))
+                ).select("left_id", "right_id", "block_key")
             )
             n_rescored = seen["rows"]
             if n_rescored:
@@ -115,10 +116,12 @@ def rethreshold_clusters(
         components = connected_components(near.unionByName(exact_edges), new_cfg)
         clusters = assign_clusters(prior_features, components)
 
-    rows = [
-        ("rethreshold", "old_threshold", float(cfg.similarity_threshold)),
-        ("rethreshold", "new_threshold", float(new_threshold)),
-        ("rethreshold", "rescored_pairs", float(n_rescored)),
-    ] + clock.rows()
-    metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
+    metrics = clock.metrics(
+        spark,
+        [
+            ("rethreshold", "old_threshold", float(cfg.similarity_threshold)),
+            ("rethreshold", "new_threshold", float(new_threshold)),
+            ("rethreshold", "rescored_pairs", float(n_rescored)),
+        ],
+    )
     return RethresholdResult(scored, clusters, metrics)

@@ -25,6 +25,10 @@ change:
   deleted representative's, so it can match rows the old representative
   did not).
 
+Phase A is the fold's cluster repair (``incremental.affected_census`` +
+``reclose``): touched = deleted + promoted rows, members = the rest of
+their clusters, edges = ``replayed_evidence``.
+
 Every control frame (deleted ids, affected clusters, promoted ids, member
 sets) is bounded by the deletion batch x cluster sizes and broadcast; the
 corpus is scanned (column-pruned, semi-probed), never shuffled.
@@ -46,8 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.clustering import connected_components
-from .incremental import IncrementalResult, resolve_incremental
+from .incremental import IncrementalResult, affected_census, reclose, resolve_incremental
 from .pipeline import exact_duplicate_edges, sha_group_key
 from .stages import StageClock, cut_lineage
 
@@ -61,26 +64,17 @@ class RetractionResult:
     # passed in), with the fold's additions — the next prior_blocks
 
 
-def replay_reclose(
+def replayed_evidence(
     members: DataFrame,
-    unchanged: DataFrame,
     prior_features: DataFrame,
     prior_scored: DataFrame,
     cfg: PipelineConfig,
-    must: DataFrame | None = None,
-    cannot: DataFrame | None = None,
 ) -> DataFrame:
-    """Re-close the clusters of ``members`` ((file_id) rows whose
-    assignment is recomputed) from their surviving evidence and union them
-    with ``unchanged`` ((file_id, cluster_id) rows kept verbatim).
-
-    The evidence is replayed, never re-scored (pair scores are
-    pair-local): prior matched pairs with both endpoints in the member set,
-    plus exact star edges among the members' sha groups (representative =
-    min member). ``cannot`` / ``must`` ((src, dst), src < dst) remove and
-    add evidence edges before connected components runs. Shared by
-    retraction and review, whose repairs differ only in which rows they
-    recompute and in those overrides."""
+    """The (src, dst) evidence among ``members`` (file_id), replayed, never
+    re-scored (pair scores are pair-local): prior matched pairs with both
+    endpoints in the member set, plus exact star edges among the members'
+    sha groups (representative = min member). Retraction and review
+    re-close their affected clusters over it."""
     near = (
         prior_scored.filter(F.col("score") >= cfg.similarity_threshold)
         .join(
@@ -98,17 +92,7 @@ def replay_reclose(
     _, exact = exact_duplicate_edges(
         prior_features.join(F.broadcast(members), "file_id", "left_semi")
     )
-    edges = near.unionByName(exact)
-    if cannot is not None:
-        edges = edges.join(F.broadcast(cannot), ["src", "dst"], "left_anti")
-    if must is not None:
-        edges = edges.unionByName(must)
-    edges, _ = cut_lineage(edges)
-    components = connected_components(edges, cfg)
-    singles = members.join(components, "file_id", "left_anti").select(
-        "file_id", F.col("file_id").alias("cluster_id")
-    )
-    return unchanged.unionByName(components).unionByName(singles)
+    return near.unionByName(exact)
 
 
 def retract_and_repair(
@@ -170,25 +154,20 @@ def retract_and_repair(
     # --- phase A: retract + re-close affected clusters ----------------
     with clock.timed("retract_reclose"):
         touched = del_ids.unionByName(promoted)
-        aff_clusters, seen = cut_lineage(
-            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-            .select("cluster_id")
-            .distinct()
-        )
-        n_aff = seen["rows"]
-        unchanged = prior_clusters.join(
-            F.broadcast(aff_clusters), "cluster_id", "left_anti"
-        )
+        affected, unchanged, n_aff = affected_census(prior_clusters, touched)
         # surviving, non-promoted members of the affected clusters — the
         # rows whose assignment must be recomputed from surviving evidence
         # (interim sha representative = min member; the promoted-rep fold
         # below re-collapses groups that gained their true new one)
         members, _ = cut_lineage(
-            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-            .join(F.broadcast(touched), "file_id", "left_anti")
-            .select("file_id")
+            affected.select("file_id").join(F.broadcast(touched), "file_id", "left_anti")
         )
-        phase_a = replay_reclose(members, unchanged, prior_features, prior_scored, cfg)
+        phase_a, _ = reclose(
+            unchanged,
+            members,
+            replayed_evidence(members, prior_features, prior_scored, cfg),
+            cfg,
+        )
 
     blocks_surv = (
         prior_blocks.join(F.broadcast(touched), "file_id", "left_anti")
@@ -196,10 +175,13 @@ def retract_and_repair(
         else None
     )
 
+    rows = [
+        ("retraction", "deleted_rows", float(n_deleted)),
+        ("retraction", "promoted_reps", float(n_promoted)),
+        ("retraction", "affected_prior_clusters", float(n_aff)),
+    ]
     if n_promoted == 0:
-        return RetractionResult(
-            feat_surv, phase_a, _metrics(spark, n_deleted, 0, n_aff, clock), blocks_surv
-        )
+        return RetractionResult(feat_surv, phase_a, clock.metrics(spark, rows), blocks_surv)
 
     # --- phase B: fold promoted representatives back in ---------------
     # They are "new" to the scoring stage (non-representatives never
@@ -232,16 +214,5 @@ def retract_and_repair(
             prior_blocks=blocks_surv,
         )
 
-    metrics = _metrics(spark, n_deleted, n_promoted, n_aff, clock).unionByName(
-        fold.metrics
-    )
+    metrics = clock.metrics(spark, rows).unionByName(fold.metrics)
     return RetractionResult(fold.features, fold.clusters, metrics, fold.blocks)
-
-
-def _metrics(spark, n_deleted: int, n_promoted: int, n_aff: int, clock: StageClock):
-    rows = [
-        ("retraction", "deleted_rows", float(n_deleted)),
-        ("retraction", "promoted_reps", float(n_promoted)),
-        ("retraction", "affected_prior_clusters", float(n_aff)),
-    ] + clock.rows()
-    return spark.createDataFrame(rows, "stage string, metric string, value double")

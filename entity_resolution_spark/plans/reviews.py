@@ -3,8 +3,7 @@
 The other half of the active-learning loop: ``linkage.review_queue``
 surfaces the pairs nearest the decision boundary; a reviewer returns
 (left_id, right_id, decision) verdicts, and this plan folds them into the
-standing clusters without re-resolving the corpus — the same
-delta-proportional repair shape as ``retraction.retract_and_repair``:
+standing clusters without re-resolving the corpus:
 
 - clusters containing no decision endpoint keep their assignment
   verbatim;
@@ -16,6 +15,10 @@ delta-proportional repair shape as ``retraction.retract_and_repair``:
   constraint solver, and the semantics is documented and oracle-pinned);
   a ``match`` verdict adds the edge, merging clusters if the endpoints
   were separate.
+
+The repair is the fold's (``incremental.affected_census`` + ``reclose``):
+touched = decision endpoints, members = their whole clusters, edges =
+``retraction.replayed_evidence`` - ``non_match`` + ``match``.
 
 Every control frame is bounded by the decision batch x cluster sizes and
 broadcast; the corpus is scanned, never shuffled. Overrides are sticky
@@ -32,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from .retraction import replay_reclose
+from .incremental import affected_census, endpoint_ids, reclose
+from .retraction import replayed_evidence
 from .stages import StageClock, cut_lineage
 
 
@@ -75,18 +79,15 @@ def apply_review_decisions(
         bad = dec.filter(~F.col("decision").isin("match", "non_match"))
         if bad.limit(1).count():
             raise ValueError("decision must be 'match' or 'non_match'")
-        touched = (
-            dec.select(F.col("src").alias("file_id"))
-            .unionByName(dec.select(F.col("dst").alias("file_id")))
-            .distinct()
-        )
-        touched_rows, _ = cut_lineage(
-            prior_clusters.join(F.broadcast(touched), "file_id", "left_semi")
-        )
+        touched = endpoint_ids(dec, "src", "dst")
+        affected, unchanged, n_aff = affected_census(prior_clusters, touched)
+        # members cover whole clusters, so the per-group minimum inside the
+        # member set equals the sha group's global minimum
+        members, _ = cut_lineage(affected.select("file_id"))
         # a verdict on an id the prior resolution never saw would add a
         # phantom edge (and phantom cluster rows) — reject the batch,
-        # naming every such id
-        unknown = touched.join(touched_rows, "file_id", "left_anti").collect()
+        # naming every such id; every known touched id is a member
+        unknown = touched.join(members, "file_id", "left_anti").collect()
         if unknown:
             ids = sorted(r["file_id"] for r in unknown)
             raise ValueError(f"decision ids absent from prior_clusters: {ids}")
@@ -99,27 +100,21 @@ def apply_review_decisions(
         cannot, seen = cut_lineage(verdict.filter(F.col("__m") == 0).select("src", "dst"))
         n_cannot = seen["rows"]
 
-        aff_clusters, seen = cut_lineage(touched_rows.select("cluster_id").distinct())
-        n_aff = seen["rows"]
-        unchanged = prior_clusters.join(
-            F.broadcast(aff_clusters), "cluster_id", "left_anti"
-        )
-        # members cover whole clusters, so the per-group minimum inside the
-        # member set equals the sha group's global minimum
-        members, _ = cut_lineage(
-            prior_clusters.join(F.broadcast(aff_clusters), "cluster_id", "left_semi")
-            .select("file_id")
-        )
         # overrides act on the evidence edges (canonical src < dst): the
         # cannot edges are removed, the must edges added
-        clusters = replay_reclose(
-            members, unchanged, prior_features, prior_scored, cfg, must, cannot
+        edges = (
+            replayed_evidence(members, prior_features, prior_scored, cfg)
+            .join(F.broadcast(cannot), ["src", "dst"], "left_anti")
+            .unionByName(must)
         )
+        clusters, _ = reclose(unchanged, members, edges, cfg)
 
-    rows = [
-        ("review", "match_overrides", float(n_must)),
-        ("review", "non_match_overrides", float(n_cannot)),
-        ("review", "affected_prior_clusters", float(n_aff)),
-    ] + clock.rows()
-    metrics = spark.createDataFrame(rows, "stage string, metric string, value double")
+    metrics = clock.metrics(
+        spark,
+        [
+            ("review", "match_overrides", float(n_must)),
+            ("review", "non_match_overrides", float(n_cannot)),
+            ("review", "affected_prior_clusters", float(n_aff)),
+        ],
+    )
     return ReviewResult(clusters, metrics)

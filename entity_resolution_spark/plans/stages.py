@@ -63,5 +63,8 @@ class StageClock:
             out, seen = cut_lineage(df)
             return out, seen["rows"]
 
-    def rows(self) -> list[tuple[str, str, float]]:
-        return [(k, "seconds", float(v)) for k, v in self.seconds.items()]
+    def metrics(self, spark, rows) -> DataFrame:
+        """The plan's ``(stage, metric, value)`` metrics frame: ``rows``
+        followed by one ``seconds`` row per timed stage."""
+        rows = list(rows) + [(k, "seconds", float(v)) for k, v in self.seconds.items()]
+        return spark.createDataFrame(rows, "stage string, metric string, value double")

@@ -5,13 +5,14 @@ folds each micro-batch of new files into the standing clusters with
 Shape: file-source stream -> foreachBatch fold -> versioned state dirs.
 
 - **State** lives under ``state_dir/v{batch_id}/{features,clusters}`` as
-  parquet with Spark's ``_SUCCESS`` markers; the newest fully-committed
-  version is the prior for the next fold. Versioning (instead of
-  overwrite-in-place) matters because the fold READS the prior state while
-  computing the next one — overwriting the files being read is undefined —
-  and it makes replays idempotent: if the driver dies between the write
-  and the checkpoint commit, the batch re-runs and simply rewrites the
-  same version.
+  parquet with Spark's ``_SUCCESS`` markers. Batch N folds into the newest
+  fully-committed version BELOW N (none: a full resolve). Versioning
+  matters because the fold READS its prior while writing the next
+  version, and the rule makes replays idempotent: if the driver dies
+  after batch N wrote ``v{N}`` but before the stream committed N, the
+  replay folds into the same prior again and rewrites ``v{N}`` (taking
+  ``v{N}`` as its prior would re-fold its files and overwrite what it
+  reads).
 - **Exactly-once** file accounting comes from the stream checkpoint (each
   input file enters exactly one micro-batch).
 - The first batch (no prior state) runs the full batch pipeline; later
@@ -59,9 +60,11 @@ def latest_state(spark: SparkSession, state_dir: str):
     committed version, or None. ``blocks`` is the persisted blocking index
     (older state dirs may predate it — folds then re-key the old corpus)."""
     versions = _committed_versions(state_dir)
-    if not versions:
-        return None
-    base = os.path.join(state_dir, f"v{versions[-1]}")
+    return _read_state(spark, state_dir, versions[-1]) if versions else None
+
+
+def _read_state(spark: SparkSession, state_dir: str, version: int):
+    base = os.path.join(state_dir, f"v{version}")
     blocks_dir = os.path.join(base, "blocks")
     blocks = (
         spark.read.parquet(blocks_dir)
@@ -90,7 +93,8 @@ def run_continuous_resolution(
         if batch_df.isEmpty():
             return
         batch = batch_df.drop("event_time")
-        prior = latest_state(spark, state_dir)
+        below = [v for v in _committed_versions(state_dir) if v < batch_id]
+        prior = _read_state(spark, state_dir, below[-1]) if below else None
         if prior is None:
             from ..plans.pipeline import resolve
 
